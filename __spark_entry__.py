@@ -11,6 +11,8 @@ holds the Spark-side callables, oracles.py the DuckDB SQL twins.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
@@ -31,9 +33,41 @@ def entry(spark: SparkSession) -> DataFrame:
     return _queries.QUERIES["costs_by_service_30d"](spark, "/root/testdata/sf0.001")
 
 
+def _rotation_order(names: list[str]) -> list[str]:
+    """``names`` staleness-first: names with no GREEN row in any
+    committed CORRECTNESS_r*.json first, then ascending by the round
+    of their newest green row, registration order breaking ties.
+    Only green rows (rows_match and hash_match true, err null) count:
+    a red or rows-only row must not defer a query's re-check. With no
+    CORRECTNESS files on disk this is plain registration order."""
+    repo = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+        try:
+            rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name, row in rows.items():
+            green = (
+                isinstance(row, dict)
+                and row.get("rows_match") is True
+                and row.get("hash_match") is True
+                and row.get("err") is None
+            )
+            if green:
+                last[name] = max(last.get(name, 0), rnd)
+    # sorted() is stable, so ties keep registration order
+    return sorted(names, key=lambda n: last.get(n, -1))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(_queries.QUERIES)
+    """One entry per registered query, in the order the driver's
+    correctness window walks them (``_rotation_order``): its first 50
+    entries are the next window, so every query is re-checked in turn
+    (tests/test_rotation.py guards the order)."""
+    return {n: _queries.QUERIES[n] for n in _rotation_order(list(_queries.QUERIES))}
 
 
 def oracle_sql() -> dict[str, str]:

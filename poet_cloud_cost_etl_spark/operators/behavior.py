@@ -586,376 +586,3 @@ def cohort_ltv_curves(
         )
         .orderBy("cohort_week", "offset_weeks")
     )
-
-
-def attribution_model_compare(
-    events: DataFrame,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    id_col: str,
-    value_col: str,
-    purchase_type: str = "purchase",
-    lookback_s: int = 86_400,
-) -> DataFrame:
-    """X190: multi-model revenue attribution — last-touch,
-    first-touch, and linear (equal-credit) attribution computed side
-    by side per event type, the comparison panel behind every
-    attribution-model argument (X173 ships last-touch alone; the
-    models disagree exactly where journeys are long, and the spread
-    IS the decision information).
-
-    Semantics match X173 bit-for-bit on the last-touch row: a touch
-    is a same-user non-purchase event with (epoch, id) strictly
-    before the purchase and within ``lookback_s``; purchases with no
-    touch credit ``(none)`` under every model.  Linear credit splits
-    the integer cents exactly: base = cents div n plus one extra
-    cent to the ``cents mod n`` EARLIEST touches (largest-remainder
-    — sums reproduce the purchase total exactly, pinned by test).
-
-    Scale: one bounded-fan-out join (purchases x same-user touches
-    within the lookback window — the as-of join family, J5) + two
-    rank windows keyed by purchase + a |models|x|types| aggregate."""
-    base = events.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__t"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(id_col).alias("__id"),
-        F.expr(CENTS.format(col=value_col)).alias("__cents"),
-    )
-    purchases = base.filter(F.col("__t") == purchase_type).select(
-        F.col("__u"),
-        F.col("__us").alias("__pus"),
-        F.col("__id").alias("__pid"),
-        "__cents",
-    )
-    touches = base.filter(F.col("__t") != purchase_type).select(
-        F.col("__u"),
-        F.col("__us").alias("__tus"),
-        F.col("__id").alias("__tid"),
-        F.col("__t").alias("__ttype"),
-    )
-    lb_us = int(lookback_s) * 1_000_000
-    j = purchases.join(
-        touches,
-        (purchases.__u == touches.__u)
-        & (
-            F.struct(F.col("__tus"), F.col("__tid"))
-            < F.struct(F.col("__pus"), F.col("__pid"))
-        )
-        & (F.col("__pus") - F.col("__tus") <= F.lit(lb_us)),
-    ).select("__pus", "__pid", "__cents", "__tus", "__tid", "__ttype")
-    w_asc = Window.partitionBy("__pid").orderBy("__tus", "__tid")
-    w_desc = Window.partitionBy("__pid").orderBy(
-        F.desc("__tus"), F.desc("__tid")
-    )
-    ranked = (
-        j.withColumn("__r_first", F.row_number().over(w_asc))
-        .withColumn("__r_last", F.row_number().over(w_desc))
-        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("__pid")))
-    )
-    last = ranked.filter(F.col("__r_last") == 1).select(
-        F.lit("last").alias("model"),
-        F.col("__ttype").alias("attributed_type"),
-        F.col("__cents").alias("__credit"),
-    )
-    first = ranked.filter(F.col("__r_first") == 1).select(
-        F.lit("first").alias("model"),
-        F.col("__ttype").alias("attributed_type"),
-        F.col("__cents").alias("__credit"),
-    )
-    # Largest-remainder split in FLOOR-div/pmod form (r11 ADVICE):
-    # sum over r=1..n of (floor(c/n) + [r <= pmod(c, n)]) == c for ANY
-    # integer cents, refunds included — the truncating `div`/signed `%`
-    # form loses the remainder cents when c < 0 (pmod(c,n) is what `%`
-    # returns only for c >= 0, where the two forms coincide).  The
-    # floor-div is the exact integer (c - pmod(c, n)) div n, never a
-    # double round-trip.
-    linear = ranked.select(
-        F.lit("linear").alias("model"),
-        F.col("__ttype").alias("attributed_type"),
-        F.expr(
-            "(__cents - pmod(__cents, __n)) div __n "
-            "+ CASE WHEN __r_first <= pmod(__cents, __n) "
-            "THEN 1 ELSE 0 END"
-        ).alias("__credit"),
-    )
-    touched = ranked.select("__pid").distinct()
-    untouched = purchases.join(touched, "__pid", "left_anti")
-    none_rows = None
-    for model in ("last", "first", "linear"):
-        m = untouched.select(
-            F.lit(model).alias("model"),
-            F.lit("(none)").alias("attributed_type"),
-            F.col("__cents").alias("__credit"),
-        )
-        none_rows = m if none_rows is None else none_rows.unionByName(m)
-    credits = last.unionByName(first).unionByName(linear).unionByName(
-        none_rows
-    )
-    totals = credits.groupBy("model").agg(
-        F.sum("__credit").alias("__total")
-    )
-    return (
-        credits.groupBy("model", "attributed_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_credits"),
-            F.sum("__credit").alias("__c"),
-        )
-        .join(F.broadcast(totals), "model")
-        .select(
-            "model",
-            "attributed_type",
-            "n_credits",
-            (F.col("__c").cast("double") / 100.0).alias("revenue"),
-            F.expr(
-                "CASE WHEN __total = 0 THEN NULL "
-                "ELSE (1000000 * __c) div __total END"
-            ).alias("revenue_share_ppm"),
-        )
-        .orderBy("model", "attributed_type")
-    )
-
-
-def funnel_steps_conversion(
-    events: DataFrame,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    horizon_days: int = 30,
-) -> DataFrame:
-    """X196 (r16 queue): ordered k-step funnel — how many users
-    complete each step of ``steps`` IN ORDER within ``horizon_days``
-    of their first step-1 event.  The sequential generalization of
-    the registered 2-step ``funnel_click_to_purchase`` (min-per-stage
-    over two fixed types): here step i counts only events STRICTLY
-    AFTER the user's first completion of step i-1, so out-of-order
-    histories (purchase before view) never convert, and the horizon
-    anchors at the funnel ENTRY, the product-analytics convention.
-
-    Output panel, one row per step: (step_idx, step, users_reached,
-    conv_from_first_ppm, conv_from_prev_ppm) — ppm via exact integer
-    division; an empty first step yields zero rows reached and NULL
-    conversions (0-denominator guard), never a division error.
-
-    Scale: |steps| user-keyed aggregates, each co-partitioned with
-    the previous stage frame on the user key (one shuffle partitioning
-    reused down the chain; AQE collapses the re-uses), no windows, no
-    self-joins of the raw log."""
-    horizon_us = int(horizon_days) * 86_400 * 1_000_000
-    base = events.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__t"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-    )
-    cur = (
-        base.filter(F.col("__t") == steps[0])
-        .groupBy("__u")
-        .agg(F.min("__us").alias("__t0"))
-        .select("__u", "__t0", F.col("__t0").alias("__tprev"))
-    )
-    stage_counts = [
-        cur.agg(F.count(F.lit(1)).cast("long").alias("__reached"))
-        .select(F.lit(0).alias("__idx"), F.lit(steps[0]).alias("__step"), "__reached")
-    ]
-    for i, step in enumerate(steps[1:], start=1):
-        cur = (
-            base.filter(F.col("__t") == step)
-            .join(cur, "__u")
-            .filter(
-                (F.col("__us") > F.col("__tprev"))
-                & (F.col("__us") <= F.col("__t0") + F.lit(horizon_us))
-            )
-            .groupBy("__u", "__t0")
-            .agg(F.min("__us").alias("__tprev"))
-            .select("__u", "__t0", "__tprev")
-        )
-        stage_counts.append(
-            cur.agg(F.count(F.lit(1)).cast("long").alias("__reached"))
-            .select(
-                F.lit(i).alias("__idx"), F.lit(step).alias("__step"), "__reached"
-            )
-        )
-    panel = stage_counts[0]
-    for sc in stage_counts[1:]:
-        panel = panel.unionByName(sc)
-    first = panel.filter(F.col("__idx") == 0).select(
-        F.col("__reached").alias("__n0")
-    )
-    w_prev = Window.orderBy("__idx")  # |steps|-row panel: bounded
-    return (
-        panel.crossJoin(F.broadcast(first))
-        .withColumn("__nprev", F.lag("__reached").over(w_prev))
-        .select(
-            F.col("__idx").alias("step_idx"),
-            F.col("__step").alias("step"),
-            F.col("__reached").alias("users_reached"),
-            F.expr(
-                "CASE WHEN __n0 = 0 THEN NULL "
-                "ELSE (1000000 * __reached) div __n0 END"
-            ).alias("conv_from_first_ppm"),
-            F.expr(
-                "CASE WHEN __nprev IS NULL OR __nprev = 0 THEN NULL "
-                "ELSE (1000000 * __reached) div __nprev END"
-            ).alias("conv_from_prev_ppm"),
-        )
-        .orderBy("step_idx")
-    )
-
-
-def inter_event_gap_quantiles(
-    events: DataFrame,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    id_col: str,
-    qs_ppm: tuple[int, ...] = (500_000, 900_000, 990_000),
-) -> DataFrame:
-    """X197 (r16 queue): EXACT quantiles of the inter-event gap per
-    event type — per (user, type) stream, the microsecond gap between
-    consecutive events ((epoch µs, event_id) order), then for each
-    type the exact q-quantiles over all gaps: t_q = min gap g with
-    cum_gaps(≤ g) · 10⁶ ≥ q_ppm · N_type — the X141/X179 lattice
-    definition (pure integer, no interpolation), the cadence panel
-    that sizes session-gap thresholds and watermark delays from data
-    instead of folklore.
-
-    Scale (the operator exists to showcase this): the cumulative
-    count runs over the (type, gap)-value LATTICE through
-    ``ranking.with_grouped_cumsum`` — range-buckets on the numeric
-    gap globally, windows partitioned by (type, bucket), per-(type,
-    bucket) offset table — so neither users nor a per-type
-    gap-lattice (near-corpus-cardinality for continuous timestamps)
-    ever funnels through one window task.  A plain
-    ``Window.partitionBy(type).orderBy(gap)`` would be exactly the
-    few-huge-groups single-task sort the W-family exists to remove.
-
-    Output: (event_type, q_ppm, gap_us_quantile, n_gaps), ordered."""
-    from .ranking import with_grouped_cumsum
-
-    order = Window.partitionBy("__u", "__t").orderBy("__us", "__id")
-    gaps = (
-        events.select(
-            F.col(user_col).alias("__u"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-            F.col(id_col).alias("__id"),
-        )
-        .withColumn("__prev", F.lag("__us").over(order))
-        .filter(F.col("__prev").isNotNull())
-        .select("__t", (F.col("__us") - F.col("__prev")).alias("gap_us"))
-    )
-    lattice = (
-        gaps.groupBy("__t", "gap_us")
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        # eager checkpoint (the rfm/X175 discipline): the grouped
-        # cumsum consumes its input three times (bucket probe,
-        # window, offsets) — without the pin each consumer replays
-        # the events scan + the per-(user,type) lag window.
-        .localCheckpoint(eager=True)
-    )
-    cum = with_grouped_cumsum(
-        lattice, ["__t"], ["gap_us"], "__c", cum_col="__cum", total_col="__n"
-    )
-    qgrid = events.sparkSession.createDataFrame(
-        [(int(q),) for q in qs_ppm], "q_ppm long"
-    )
-    return (
-        cum.crossJoin(F.broadcast(qgrid))
-        .groupBy(F.col("__t").alias("event_type"), "q_ppm")
-        .agg(
-            F.min(
-                F.when(
-                    F.expr("__cum * 1000000 >= q_ppm * __n"),
-                    F.col("gap_us"),
-                )
-            ).alias("gap_us_quantile"),
-            F.max("__n").alias("n_gaps"),
-        )
-        .orderBy("event_type", "q_ppm")
-    )
-
-
-def session_type_cooccurrence(
-    events: DataFrame,
-    user_col: str,
-    type_col: str,
-    ts_col: str,
-    id_col: str,
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """X198 (r16 queue): event-type co-occurrence lift within
-    sessions — for each unordered type pair (a < b), in how many
-    30-min-gap sessions both appear, with support and lift: lift_ppm
-    = 10⁶·N_sessions·n_both div (n_a·n_b) through DECIMAL(38,0) (the
-    X48 PMI-lift discipline moved from token windows to session
-    scopes; lift > 10⁶ means the pair co-occurs above independence).
-    The session-scoped sibling of X180's ordered trigrams: unordered
-    co-presence catches associations order-blind paths miss.
-
-    Scale: sessionization is the X180 flag-and-running-sum user
-    window; the pair stage self-joins the DISTINCT (session, type)
-    table on the session key, so per-session work is bounded by the
-    type-vocabulary (|T|² pairs max per session, |T| tiny), linear in
-    sessions; the panel is ≤ |T|² rows."""
-    gap_us = int(gap_minutes) * 60 * 1_000_000
-    order = Window.partitionBy("__u").orderBy("__us", "__id")
-    running = order.rowsBetween(Window.unboundedPreceding, 0)
-    base = (
-        events.select(
-            F.col(user_col).alias("__u"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-            F.col(id_col).alias("__id"),
-        )
-        .withColumn(
-            "__new",
-            F.when(
-                F.lag("__us").over(order).isNull()
-                | (F.col("__us") - F.lag("__us").over(order) > gap_us),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn("__sess", F.sum("__new").over(running))
-    )
-    sess_types = base.select(
-        F.concat_ws("#", F.col("__u"), F.col("__sess")).alias("__sid"),
-        "__t",
-    ).distinct()
-    totals = sess_types.agg(
-        F.count_distinct("__sid").cast("long").alias("__N")
-    )
-    type_counts = sess_types.groupBy("__t").agg(
-        F.count(F.lit(1)).cast("long").alias("__nt")
-    )
-    pa = sess_types.select("__sid", F.col("__t").alias("type_a"))
-    pb = sess_types.select("__sid", F.col("__t").alias("type_b"))
-    pairs = (
-        pa.join(pb, "__sid")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-    )
-    na = type_counts.select(
-        F.col("__t").alias("type_a"), F.col("__nt").alias("__na")
-    )
-    nb = type_counts.select(
-        F.col("__t").alias("type_b"), F.col("__nt").alias("__nb")
-    )
-    return (
-        pairs.join(F.broadcast(na), "type_a")
-        .join(F.broadcast(nb), "type_b")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "type_a",
-            "type_b",
-            "n_both",
-            F.expr("(1000000 * n_both) div __N").alias("support_ppm"),
-            F.expr(
-                "CAST((CAST(1000000 AS DECIMAL(38,0)) * __N * n_both) "
-                "div (CAST(__na AS DECIMAL(38,0)) * __nb) AS BIGINT)"
-            ).alias("lift_ppm"),
-        )
-        .orderBy("type_a", "type_b")
-    )

@@ -2530,13 +2530,6 @@ def exact_substring_rewrite(
     )
 
 
-# ---------------------------------------------------------------------------
-# r11-queue: implemented + oracled in round 10, registration deferred
-# to round 11 (the r9->r10 staging pattern: the r10 window must cover
-# the 10-name cohort + the r4-stale backlog first).
-# ---------------------------------------------------------------------------
-
-
 def _weighted_term_pairs(
     wrows: DataFrame,
     id_col: str,
@@ -3103,13 +3096,6 @@ def minhash_calibration(
     )
 
 
-# ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol: the r11 window must
-# cover the 8-name r11 cohort + the r5-stale backlog first).
-# ---------------------------------------------------------------------------
-
-
 def winnow_fingerprint_census(
     df: DataFrame,
     id_col: str,
@@ -3566,196 +3552,3 @@ def paradigm_agreement(
         )
         .orderBy("paradigm")
     )
-
-
-def blocking_scheme_pareto(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-    k: int = 8,
-    bands: int = 4,
-    window: int = 3,
-    prefix_tokens: int = 3,
-) -> DataFrame:
-    """X188: blocking-scheme Pareto panel — the record-linkage
-    reduction-ratio / pairs-completeness trade (Hernández & Stolfo
-    1995; Christen 2012) measured for the engine's three candidate
-    paradigms AT ONCE against exact ground truth: LSH banding (X2c),
-    sorted-neighborhood (X84), and first-k-token prefix blocking
-    (the X25 key).  X45 grades LSH alone; this panel is the
-    scheme-SELECTION artifact: candidates generated, truth pairs
-    hit, recall, and the reduction ratio vs the N(N-1)/2 all-pairs
-    space — the two axes every blocking choice trades.
-
-    Exactness: truth is the exact round-6 Jaccard >= threshold pair
-    set; every other number is an exact integer count or ppm
-    division.  The prefix scheme's candidate COUNT uses the
-    closed form sum c*(c-1)/2 over bucket sizes and its hits use
-    key-equality against the truth pairs — no prefix pair
-    materialization at all (the same bucket that would explode
-    pair-wise costs one integer per bucket here).
-
-    Scale: truth + LSH + SNM are the production-bounded existing
-    operators; the shingle table is checkpointed ONCE and feeds both
-    the truth pairs and the MinHash signatures (the X74/bbit shared-
-    scan lesson — the TOKENS_SQL+shingle scan dominates a text-corpus
-    plan and must not run per consumer); the panel adds |schemes|
-    rows of integer arithmetic over broadcast totals."""
-    sh = doc_shingles(df, id_col, text_col)
-    sh = sh.localCheckpoint(eager=True)
-    truth = ngram_jaccard_pairs(sh, id_col, threshold).select(
-        "doc_a", "doc_b"
-    )
-    truth = truth.localCheckpoint(eager=True)
-    n_docs = df.select(F.col(id_col)).agg(F.count(F.lit(1)).alias("__n"))
-    total_pairs = n_docs.select(
-        F.expr("(__n * (__n - 1)) div 2").alias("__tp")
-    )
-    truth_n = truth.agg(F.count(F.lit(1)).alias("__nt"))
-
-    sig = minhash_signatures(sh, id_col, k)
-    lsh = lsh_candidate_pairs(sig, id_col, k, bands).select("doc_a", "doc_b")
-    snm = sorted_neighborhood_pairs(df, id_col, text_col, window).select(
-        "doc_a", "doc_b"
-    )
-    keys = df.select(
-        F.col(id_col),
-        F.md5(
-            F.expr(
-                "array_join(slice(filter("
-                + TOKENS_SQL.format(col=text_col)
-                + f", x -> x != ''), 1, {int(prefix_tokens)}), ' ')"
-            )
-        ).alias("__key"),
-    )
-    prefix_cand = (
-        keys.groupBy("__key")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(F.sum(F.expr("(__c * (__c - 1)) div 2")).alias("__cand"))
-    )
-    prefix_hits = (
-        truth.join(
-            keys.select(F.col(id_col).alias("doc_a"), F.col("__key").alias("__ka")),
-            "doc_a",
-        )
-        .join(
-            keys.select(F.col(id_col).alias("doc_b"), F.col("__key").alias("__kb")),
-            "doc_b",
-        )
-        .filter(F.col("__ka") == F.col("__kb"))
-        .agg(F.count(F.lit(1)).alias("__hit"))
-    )
-
-    def _row(scheme: str, cand: DataFrame) -> DataFrame:
-        c = cand.agg(F.count(F.lit(1)).alias("__cand"))
-        h = cand.join(truth, ["doc_a", "doc_b"]).agg(
-            F.count(F.lit(1)).alias("__hit")
-        )
-        return (
-            c.crossJoin(h)
-            .crossJoin(truth_n)
-            .crossJoin(total_pairs)
-            .select(
-                F.lit(scheme).alias("scheme"),
-                F.col("__cand").cast("long").alias("n_candidates"),
-                F.col("__nt").cast("long").alias("n_truth"),
-                F.col("__hit").cast("long").alias("n_hits"),
-                F.expr(
-                    "CASE WHEN __nt = 0 THEN NULL "
-                    "ELSE (1000000 * __hit) div __nt END"
-                ).alias("recall_ppm"),
-                F.expr(
-                    "CASE WHEN __tp = 0 THEN NULL "
-                    "ELSE 1000000 - (1000000 * __cand) div __tp END"
-                ).alias("reduction_ratio_ppm"),
-            )
-        )
-
-    prefix_row = (
-        prefix_cand.crossJoin(prefix_hits)
-        .crossJoin(truth_n)
-        .crossJoin(total_pairs)
-        .select(
-            F.lit("prefix").alias("scheme"),
-            F.col("__cand").cast("long").alias("n_candidates"),
-            F.col("__nt").cast("long").alias("n_truth"),
-            F.col("__hit").cast("long").alias("n_hits"),
-            F.expr(
-                "CASE WHEN __nt = 0 THEN NULL "
-                "ELSE (1000000 * __hit) div __nt END"
-            ).alias("recall_ppm"),
-            F.expr(
-                "CASE WHEN __tp = 0 THEN NULL "
-                "ELSE 1000000 - (1000000 * __cand) div __tp END"
-            ).alias("reduction_ratio_ppm"),
-        )
-    )
-    return (
-        _row("lsh", lsh)
-        .unionByName(_row("snm", snm))
-        .unionByName(prefix_row)
-        .orderBy("scheme")
-    )
-
-
-def threshold_sweep_clusters(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    thresholds: tuple[float, ...] = (0.5, 0.7, 0.9),
-) -> DataFrame:
-    """X193: near-dup cluster census vs Jaccard threshold — the
-    cluster-stability curve behind every threshold choice: sweep the
-    X2d/X7 pipeline over ``thresholds`` and report, per sweep point,
-    the edge count, multi-doc cluster count, clustered-doc mass,
-    largest cluster, and the dedup excess (docs that survivorship
-    would drop).  A threshold whose census jumps between adjacent
-    sweep points is unstable on this corpus; the standard artifact
-    for picking the X7 dial with evidence.
-
-    Exactness: ONE pair table at min(thresholds) (checkpointed, the
-    shared-scan discipline), filtered per point on the round-6
-    jaccard both engines compute identically; CC labels are the X7
-    min-label fixpoint; all census numbers are exact integers.
-
-    Scale: pair generation once; each sweep point reruns only CC on
-    a SHRINKING edge set (bounded rounds on near-clique graphs) +
-    one cluster-keyed aggregate."""
-    from .graph import connected_components
-
-    pairs = ngram_jaccard_from_docs(
-        df, id_col, text_col, min(thresholds)
-    ).select("doc_a", "doc_b", "jaccard")
-    pairs = pairs.localCheckpoint(eager=True)
-    nodes = df.select(F.col(id_col).alias("id"))
-    out = None
-    for t in sorted(thresholds):
-        edges = pairs.filter(F.col("jaccard") >= t).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        cc = connected_components(nodes, edges)
-        sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("__s"))
-        panel = (
-            sizes.filter(F.col("__s") >= 2)
-            .agg(
-                F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n_clusters"),
-                F.coalesce(F.sum("__s"), F.lit(0)).alias("n_docs_clustered"),
-                F.coalesce(F.max("__s"), F.lit(0)).alias("largest_cluster"),
-            )
-            .crossJoin(
-                edges.agg(F.count(F.lit(1)).alias("n_edges"))
-            )
-            .select(
-                F.lit(int(round(t * 1_000_000))).alias("threshold_ppm"),
-                F.col("n_edges").cast("long"),
-                F.col("n_clusters").cast("long"),
-                F.col("n_docs_clustered").cast("long"),
-                F.col("largest_cluster").cast("long"),
-                (F.col("n_docs_clustered") - F.col("n_clusters"))
-                .cast("long")
-                .alias("dedup_excess"),
-            )
-        )
-        out = panel if out is None else out.unionByName(panel)
-    return out.orderBy("threshold_ppm")

@@ -1419,105 +1419,3 @@ def pq_distortion_by_label(
         )
         .orderBy("label", "subspace")
     )
-
-
-def ood_mahalanobis_panel(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    outlier_factor: int = 2,
-) -> DataFrame:
-    """X191: diagonal-Mahalanobis out-of-distribution panel — each
-    vector scored against the CORPUS per-dimension mean/variance
-    (score = sum_i (x_i - mu_i)^2 / var_i, the product of X50's
-    moments turned into a per-vector novelty dial), aggregated per
-    label.  Under in-distribution data the score concentrates near
-    d; a label whose mean score towers over d is drawn from a
-    different region than the corpus the index/codebooks were fit
-    on — the OOD screen run before X42/X8 artifacts are trusted on
-    new data.  Outliers = score > ``outlier_factor``·d (the 2d
-    heuristic; chi-square_d's bulk ends well below it).
-
-    Exactness: per-dim stats come from exact scaled-integer sums
-    (round(x·1e6) per cell — the X50 convention): mu·1e6 = S1/n and
-    var·1e12 = (n·S2 − S1²)/n² are each ONE double expression over
-    exact integers, broadcast as an index-ordered array; the
-    per-vector fold runs in array order (deterministic in both
-    engines), rounds to 6, and aggregates as e6 integers.
-
-    Scale: one (dim)-keyed aggregate (64 rows out), one broadcast
-    array, one narrow fold per row, one |labels|-row panel."""
-    cells = emb.select(
-        F.col(label_col),
-        F.posexplode(F.col(vec_col)).alias("__d", "__x"),
-    ).select(
-        "__d", F.round(F.col("__x").cast("double") * 1_000_000).cast("long").alias("__xs")
-    )
-    stats = (
-        cells.groupBy("__d")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__xs").alias("__s1"),
-            F.sum(F.col("__xs").cast("decimal(38,0)") * F.col("__xs")).alias(
-                "__s2"
-            ),
-        )
-        .select(
-            "__d",
-            (F.col("__s1").cast("double") / F.col("__n")).alias("__mu6"),
-            F.expr(
-                "(CAST(__n AS DOUBLE) * CAST(__s2 AS DOUBLE) "
-                "- CAST(__s1 AS DOUBLE) * CAST(__s1 AS DOUBLE)) "
-                "/ (CAST(__n AS DOUBLE) * CAST(__n AS DOUBLE))"
-            ).alias("__var12"),
-        )
-    )
-    arrs = stats.agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(__d, __mu6))), "
-            "s -> s.__mu6)"
-        ).alias("__mus"),
-        F.expr(
-            "transform(array_sort(collect_list(struct(__d, __var12))), "
-            "s -> s.__var12)"
-        ).alias("__vars"),
-    )
-    score = F.expr(
-        f"round(aggregate(zip_with({vec_col}, sequence(1, size({vec_col})), "
-        "(x, i) -> (round(CAST(x AS DOUBLE) * 1000000) "
-        "- element_at(__mus, i)) * (round(CAST(x AS DOUBLE) * 1000000) "
-        "- element_at(__mus, i)) / (element_at(__vars, i) + 1.0D)), "
-        "0.0D, (acc, v) -> acc + v), 6)"
-    )
-    scored = (
-        emb.select(F.col(id_col), F.col(vec_col), F.col(label_col).alias("label"))
-        .crossJoin(F.broadcast(arrs))
-        .select(
-            "label",
-            F.col(vec_col),
-            score.alias("__score"),
-        )
-    )
-    dim = F.size(F.col(vec_col))
-    return (
-        scored.select(
-            "label",
-            "__score",
-            (F.col("__score") > (dim * F.lit(int(outlier_factor))).cast("double"))
-            .cast("long")
-            .alias("__out"),
-        )
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                "sum(CAST(ROUND(__score * 1000000) AS BIGINT)) div count(1)"
-            ).alias("mean_score_e6"),
-            F.max(F.expr("CAST(ROUND(__score * 1000000) AS BIGINT)")).alias(
-                "max_score_e6"
-            ),
-            F.sum("__out").alias("n_outliers"),
-        )
-        .orderBy("label")
-    )

@@ -93,182 +93,3 @@ def range_join(
     SMJ/SHJ and applies the range ``condition`` as a join filter —
     never a cartesian product."""
     return left.join(right, (left[on] == right[on]) & condition, "inner")
-
-
-def bloom_semijoin_prefilter(
-    fact: DataFrame,
-    dim_keys: DataFrame,
-    fact_key: str,
-    group_col: str,
-    m_bits: int = 4096,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """X189: Bloom-prefiltered semi-join — the shuffle-volume pattern
-    behind runtime row-group filtering: fold the (already filtered)
-    dim key set into an X67-convention Bloom filter (md5 bit
-    positions, <= ``m_bits`` SET-BIT rows regardless of dim size),
-    broadcast it, drop fact rows whose keys cannot match BEFORE the
-    join shuffle, then run the exact semi-join on the survivors.  A
-    Bloom 'no' is exact, so the final result equals the plain
-    semi-join bit-for-bit; what the filter buys is the shuffle:
-    only ``pass`` rows cross the exchange instead of the whole fact
-    table.  The panel reports, per ``group_col``: fact rows, Bloom
-    passes, true matches, false passes, and the shuffle-reduction
-    ppm — the evidence the (m_bits, n_hashes) dial is sized right.
-
-    Row multiplicity is preserved WITHOUT a row id: facts aggregate
-    to (group, key, count) first — the Bloom probe is per distinct
-    key (it only sees the key anyway) and every panel sum weights by
-    the count, so duplicate fact rows count exactly as the plain
-    join counts them.
-
-    Exactness: bit positions are the X67 integer arithmetic
-    (md5("j|" || key)[:8 hex] mod m_bits); every output is an exact
-    integer count or ppm division.
-
-    Scale: dim -> <= m_bits distinct positions (map-side partial)
-    -> broadcast; the fact probe aggregates (group, key) with
-    map-side combine, then a narrow broadcast-join probe; the exact
-    true-match leg (eval-only — the production path stops at the
-    probe) is one keyed join against the distinct dim keys."""
-    probes = F.array(*[
-        (
-            F.expr(
-                "CAST(conv(substring(md5(concat('{j}|', "
-                "CAST(__k AS STRING))), 1, 8), 16, 10) AS BIGINT)".format(
-                    j=j
-                )
-            )
-            % F.lit(m_bits)
-        )
-        for j in range(n_hashes)
-    ])
-    keys = dim_keys.select(F.col(fact_key).alias("__k")).distinct()
-    bloom = keys.select(F.explode(probes).alias("pos")).distinct()
-    gk = (
-        fact.select(
-            F.col(group_col).alias("grp"), F.col(fact_key).alias("__k")
-        )
-        .groupBy("grp", "__k")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    probed = (
-        gk.select("grp", "__k", "__c", F.explode(probes).alias("pos"))
-        .join(F.broadcast(bloom.withColumn("__set", F.lit(1))), "pos", "left")
-        .groupBy("grp", "__k", "__c")
-        .agg(
-            (F.sum(F.coalesce("__set", F.lit(0))) == n_hashes).alias(
-                "__pass"
-            )
-        )
-    )
-    flagged = probed.join(
-        keys.withColumn("__true", F.lit(1)), "__k", "left"
-    ).select(
-        "grp",
-        "__c",
-        "__pass",
-        F.coalesce("__true", F.lit(0)).alias("__t"),
-    )
-    return (
-        flagged.groupBy("grp")
-        .agg(
-            F.sum("__c").alias("n_fact"),
-            F.sum(F.when(F.col("__pass"), F.col("__c")).otherwise(0)).alias(
-                "n_pass"
-            ),
-            F.sum(
-                F.when(F.col("__t") == 1, F.col("__c")).otherwise(0)
-            ).alias("n_match"),
-        )
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("n_fact").cast("long"),
-            F.col("n_pass").cast("long"),
-            F.col("n_match").cast("long"),
-            (F.col("n_pass") - F.col("n_match")).cast("long").alias(
-                "n_false_pass"
-            ),
-            F.expr(
-                "CASE WHEN n_fact = 0 THEN 0 ELSE "
-                "1000000 - (1000000 * n_pass) div n_fact END"
-            ).alias("shuffle_reduction_ppm"),
-        )
-        .orderBy(group_col)
-    )
-
-
-def salted_skew_join(
-    fact: DataFrame,
-    key: Column,
-    cents: Column,
-    weight_sql: str = "__k + 1",
-    n_salts: int = 8,
-    salt: Column | None = None,
-) -> DataFrame:
-    """X195: salted skewed-key join — the classic hot-key defense
-    demonstrated as an operator with an exact plain-join oracle: the
-    fact side carries a deterministic salt, the (tiny) dim side is
-    replicated once per salt value, the join runs on (key, salt) —
-    so ONE hot key spreads over ``n_salts`` tasks instead of
-    melting one — and the post-join aggregate restores exactly the
-    unsalted result.  AQE's skew split handles mid-size skew
-    automatically; explicit salting is the tool when a single key
-    exceeds what any split can balance (the 100 TB power-law case
-    X106 audits for).
-
-    ``key``/``cents`` are column expressions over ``fact``;
-    ``weight_sql`` is a SQL expression over the dim key column
-    ``__k`` (the dim attribute is derived FROM the key so the dim
-    table is reproducible on both engines); ``salt`` is a
-    deterministic row-attribute expression supplied by the caller.
-
-    Exactness: integer cents x integer weights; the salted and
-    plain plans aggregate identical (key, cents, weight) triples —
-    equality is the oracle's claim.  The caller's ``salt`` is
-    ``pmod``-wrapped into [0, n_salts) INSIDE the operator (r11
-    ADVICE): a raw ``%`` in Spark keeps the dividend's sign, so a
-    negative salt expression would miss every replicated dim row and
-    silently drop fact rows — the wrap makes any integer expression
-    safe.  A NULL salt (or NULL key) never equi-joins and would drop
-    the row the same silent way, so both are coalesced/guarded:
-    NULL salt lands in bucket 0; NULL-key rows are excluded from
-    BOTH the fact and dim sides by construction (distinct() keeps a
-    NULL dim key, but the equi-join would never match it — dropping
-    them explicitly keeps the plain-join-equality contract honest
-    and documented rather than incidental).
-
-    Scale: dim replication is |dim| x n_salts broadcast-sized rows;
-    the fact-side exchange partitions on (key, salt)."""
-    raw_salt = salt if salt is not None else F.lit(0)
-    f = fact.select(
-        key.alias("__k"),
-        cents.alias("__cents"),
-        F.pmod(F.coalesce(raw_salt, F.lit(0)), F.lit(int(n_salts))).alias(
-            "__salt"
-        ),
-    ).filter(F.col("__k").isNotNull())
-    dim = (
-        f.select("__k")
-        .distinct()
-        .select("__k", F.expr(weight_sql).alias("__w"))
-        .select(
-            "__k",
-            "__w",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(int(n_salts) - 1))
-            ).alias("__salt"),
-        )
-    )
-    joined = f.join(dim.hint("shuffle_hash"), ["__k", "__salt"])
-    return (
-        joined.groupBy(F.col("__k").alias("key"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.max("__w").alias("weight"),
-            (
-                F.sum(F.col("__cents") * F.col("__w")).cast("double") / 100.0
-            ).alias("weighted_revenue"),
-        )
-        .orderBy("key")
-    )

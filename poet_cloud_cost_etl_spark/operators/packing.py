@@ -361,37 +361,3 @@ def cdc_chunk_stats(
         )
         .orderBy("source")
     )
-
-
-def sentence_split(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """X194: sentence segmentation to long form — the primitive under
-    chunking (X21), line dedup (X161/X171) and packing (X10): one
-    row per sentence with its 1-based position in the ORIGINAL split
-    (gaps where empty segments were dropped are deliberate — the
-    position is an address, not a rank) and its token count.  The
-    boundary rule is the engine's sentence convention
-    ('[.!?]+' + whitespace — the X161 splitter), so every
-    sentence-level operator shares one segmentation.
-
-    Scale: pure narrow map (split + posexplode + filter) — zero
-    shuffles; the output rides the scan partitioning."""
-    sents = df.select(
-        F.col(id_col),
-        F.posexplode(F.expr(rf"split({text_col}, '[.!?]+\\s+')")).alias(
-            "__p", "__s"
-        ),
-    ).select(
-        F.col(id_col),
-        (F.col("__p") + 1).alias("sent_pos"),
-        F.trim(F.col("__s")).alias("sentence"),
-    ).filter(F.col("sentence") != "")
-    return sents.select(
-        F.col(id_col),
-        "sent_pos",
-        "sentence",
-        F.expr(
-            "size(filter("
-            + TOKENS_SQL.format(col="sentence")
-            + ", x -> x != ''))"
-        ).cast("long").alias("n_tokens"),
-    ).orderBy(id_col, "sent_pos")

@@ -968,12 +968,6 @@ def uniform_group_sample(
     )
 
 
-# ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol).
-# ---------------------------------------------------------------------------
-
-
 def mixture_epoch_plan(
     df: DataFrame,
     group_col: str,
@@ -1138,84 +1132,4 @@ def mixture_design_effect(
             ).alias("deff"),
         )
         .orderBy("alpha_e2")
-    )
-
-
-def weighted_systematic_sample(
-    df: DataFrame, id_col: str, weight_col: str, k: int
-) -> DataFrame:
-    """X202 (r16 queue): deterministic probability-proportional-to-
-    size (PPS) SYSTEMATIC sample — k picks along the cumulative
-    weight axis of an md5-permuted row order (Madow 1949, the
-    systematic πps design): thresholds T_i = ((2i+1)·W) div (2k)
-    for i = 0..k-1, pick the row whose cumulative-weight interval
-    [cum − w, cum) contains T_i.  Every row's inclusion count is
-    proportional to its weight (a row with w > W/k WILL be picked
-    more than once — reported via multiplicity, the honest πps
-    semantic), selection is reproducible across engines (md5 order,
-    integer weights, integer thresholds — no float, no RNG), and
-    the design needs exactly ONE pass over the cumulative lattice —
-    the weighted companion to X9's Bernoulli ``unit_hash`` draw and
-    the X88 priority sample (which needs a top-k by float key; this
-    one is all-integer).
-
-    Output: (pick_idx, id, weight, multiplicity) — one row per
-    SELECTED id (pick_idx = the smallest winning threshold index),
-    ordered by pick_idx.
-
-    Scale: the cumulative weights run through the two-phase
-    ``ranking.with_global_cumsum`` (range-buckets on the numeric md5
-    prefix — no single-task sort of the row population); the k
-    thresholds broadcast against the cum table with a per-row
-    interval predicate (each row matches its own thresholds only),
-    so the pick join is corpus-scan-shaped, never corpus×k.  Rows
-    with non-positive weight are excluded by definition (πps assigns
-    them zero inclusion probability)."""
-    from .ranking import with_global_cumsum
-
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(weight_col).cast("long").alias("__w"),
-        F.expr(
-            f"CAST(conv(substring(md5(concat('wss#', CAST({id_col} AS "
-            "STRING))), 1, 15), 16, 10) AS BIGINT)"
-        ).alias("__hk"),
-    ).filter(F.col("__w") > 0)
-    # total col named __tot, not __W: Spark's default case-insensitive
-    # resolution would make __W ambiguous against the weight col __w.
-    cum = with_global_cumsum(
-        base, ["__hk", "__id"], "__w", cum_col="__cum", total_col="__tot"
-    )
-    kk = int(k)
-    picks = (
-        df.sparkSession.range(kk)
-        .select(F.col("id").alias("pick_idx"))
-        .crossJoin(
-            cum.agg(F.max("__tot").cast("long").alias("__wtotal"))
-        )
-        .select(
-            "pick_idx",
-            F.expr(
-                f"((2 * pick_idx + 1) * __wtotal) div (2 * {kk})"
-            ).alias("__T"),
-        )
-    )
-    hits = cum.join(
-        F.broadcast(picks),
-        (F.col("__T") >= F.col("__cum") - F.col("__w"))
-        & (F.col("__T") < F.col("__cum")),
-    )
-    return (
-        hits.groupBy("__id", "__w")
-        .agg(
-            F.min("pick_idx").cast("long").alias("pick_idx"),
-            F.count(F.lit(1)).cast("long").alias("multiplicity"),
-        )
-        .select(
-            "pick_idx",
-            F.col("__id").alias(id_col),
-            F.col("__w").alias("weight"),
-            "multiplicity",
-        )
-        .orderBy("pick_idx")
     )

@@ -2372,12 +2372,6 @@ def margin_knn_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol).
-# ---------------------------------------------------------------------------
-
-
 def semantic_decontamination(
     emb: DataFrame,
     id_col: str,
@@ -3049,86 +3043,4 @@ def mutual_knn_clusters(
             F.expr("sum(__purity) div count(1)").alias("mean_purity_ppm"),
         )
         .orderBy("cluster_size")
-    )
-
-
-def knn_1nn_label_error(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    candidates: str = "bruteforce",
-    n_centroids: int = 8,
-    nprobe: int = 2,
-) -> DataFrame:
-    """X201 (r16 queue): leave-one-out 1-NN label-error census — per
-    label: how many vectors' single nearest neighbor (self excluded,
-    the X4 round-6-cosine/id comparator) carries a DIFFERENT label,
-    plus the most-confused other label.  The classic label-noise /
-    class-overlap audit (Cover & Hart 1967's 1-NN risk, measured
-    empirically): labels whose 1-NN error is high are either noisy
-    or genuinely entangled, and downstream label-conditioned
-    curation (X14 centroids, X33 separation, X129 margin mining)
-    inherits that entanglement.  Completes the kNN-graph audit
-    family: X177 measures the GEOMETRY's pathology (hubness), this
-    measures the LABELING's.
-
-    Output per label: (label, n_vectors, n_errors, error_ppm,
-    confused_with, n_confused) — confused_with = the other label
-    most often found at rank 1 among errors (ties to the smaller
-    label id; NULL when the label has no errors).
-
-    Scale: rides ``_knn_edges`` at k=1 — ``bruteforce`` is the
-    chunked-gemm oracle shape (G=32 pinned, |N|² FLOPs by design);
-    ``candidates="ivf"`` is the linear deployment shape (X8/X168
-    inverted lists, n_centroids ∝ N at the call site).  Everything
-    after the edge build is two label-keyed joins of the k·N edge
-    table + a |labels|²-bounded confusion aggregate."""
-    edges = _knn_edges(
-        emb, id_col, vec_col, 1, candidates, n_centroids, nprobe
-    )
-    own = emb.select(
-        F.col(id_col).alias("query_id"), F.col(label_col).alias("__own")
-    )
-    nb = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("__nb"),
-    )
-    labeled = edges.join(own, "query_id").join(nb, "neighbor_id")
-    per_label = labeled.groupBy(F.col("__own").alias("label")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_vectors"),
-        F.sum(
-            (F.col("__nb") != F.col("__own")).cast("long")
-        ).alias("n_errors"),
-    )
-    confusion = (
-        labeled.filter(F.col("__nb") != F.col("__own"))
-        .groupBy(F.col("__own").alias("label"), F.col("__nb"))
-        .agg(F.count(F.lit(1)).cast("long").alias("__nc"))
-        .groupBy("label")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__nc"),
-                    (-F.col("__nb").cast("long")).alias("__neg"),
-                )
-            ).alias("__top")
-        )
-        .select(
-            "label",
-            (-F.col("__top.__neg")).alias("confused_with"),
-            F.col("__top.__nc").alias("n_confused"),
-        )
-    )
-    return (
-        per_label.join(confusion, "label", "left")
-        .select(
-            "label",
-            "n_vectors",
-            "n_errors",
-            F.expr("(1000000 * n_errors) div n_vectors").alias("error_ppm"),
-            "confused_with",
-            "n_confused",
-        )
-        .orderBy("label")
     )

@@ -43,30 +43,16 @@ def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_features(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Quality-score components: length band, stopword ratio, mean
-    word length, duplicate-token ratio — each contributing 0.25.
-
-    ``carry_cols`` ride through the scan-stage select (the
-    lang_scores convention, r15): a consumer that gates the corpus on
-    ``quality_score`` can keep the payload columns it needs in the
-    SAME narrow map instead of paying a corpus-sized join back to the
-    source frame (the former curation_manifest shape re-executed the
-    scan once per join side)."""
-    carries = [F.col(c) for c in carry_cols]
-    t = df.select(F.col(id_col), *carries, tokens(text_col).alias("__t"))
+    word length, duplicate-token ratio — each contributing 0.25."""
+    t = df.select(F.col(id_col), tokens(text_col).alias("__t"))
     n_words = F.size("__t")
     n_stop = F.expr(_in_list("__t", STOPWORDS))
     n_distinct = F.size(F.array_distinct("__t"))
     n_chars_in_words = F.expr("aggregate(__t, 0, (acc, x) -> acc + length(x))")
     feat = t.select(
         F.col(id_col),
-        *carries,
         n_words.alias("n_words"),
         F.round(n_stop.cast("double") / n_words, 6).alias("stopword_ratio"),
         F.round(n_chars_in_words.cast("double") / n_words, 6).alias("mean_word_len"),
@@ -3394,12 +3380,6 @@ def langid_agreement_by_source(
     )
 
 
-# ---------------------------------------------------------------------------
-# r12-queue: implemented + oracled in round 11, registration deferred
-# to round 12 (the r9→r10→r11 staging protocol).
-# ---------------------------------------------------------------------------
-
-
 def source_crossentropy_matrix(
     df: DataFrame,
     id_col: str,
@@ -3901,107 +3881,6 @@ def source_overlap_hll(
                 "ELSE -((((__na + __nb - coalesce(__ni, 0)) - __est_u) "
                 "* 1000000) div (__na + __nb - coalesce(__ni, 0))) END"
             ).alias("union_err_ppm"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-def stylometry_delta_matrix(
-    df: DataFrame, group_col: str, text_col: str
-) -> DataFrame:
-    """X192: Burrows' Delta stylometry matrix between sources
-    (Burrows 2002) — the function-word z-score distance that
-    authorship attribution runs on: per source, each function word's
-    rate per million tokens; per word, the cross-source mean/stddev;
-    Delta(a, b) = mean |z_a - z_b| over words.  Curation reading: a
-    source pair with near-zero Delta shares a STYLE (same generator,
-    same template farm, same author pool) even when content-level
-    dedup (X2) finds nothing — the style axis next to X34 (token
-    TVD) and X169 (cross-entropy).
-
-    The feature set is the engine's STOPWORDS list (function words
-    are exactly the style carriers); zero-variance words (identical
-    rate everywhere) carry no signal and are excluded — an exact
-    integer condition, so both engines exclude identically.
-
-    Exactness: rates are ppm integer divisions; word mean/variance
-    come from exact integer sums over the |S| sources; z-scores and
-    |z_a - z_b| are doubles from exact integers, rounded to 6 and
-    e6-scaled before the final mean division.
-
-    Scale: one vocab-FILTERED token aggregate (|S|x|W| cells, W = 8
-    stopwords), then |S|^2 x |W| broadcast-joined arithmetic."""
-    toks = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(tokens(text_col)).alias("t"),
-    ).filter(F.col("t") != "")
-    totals = toks.groupBy("grp").agg(F.count(F.lit(1)).alias("__n"))
-    sw = [F.lit(w) for w in STOPWORDS]
-    counts = (
-        toks.filter(F.col("t").isin(STOPWORDS))
-        .groupBy("grp", "t")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    grid = (
-        totals.crossJoin(
-            F.broadcast(
-                totals.sparkSession.createDataFrame(
-                    [(w,) for w in STOPWORDS], ["t"]
-                )
-            )
-        )
-        .join(counts, ["grp", "t"], "left")
-        .select(
-            "grp",
-            "t",
-            F.expr(
-                "(1000000 * coalesce(__c, 0)) div __n"
-            ).alias("__f_ppm"),
-        )
-    )
-    word_stats = grid.groupBy("t").agg(
-        F.count(F.lit(1)).alias("__k"),
-        F.sum("__f_ppm").alias("__s1"),
-        F.sum(F.col("__f_ppm").cast("decimal(38,0)") * F.col("__f_ppm")).alias(
-            "__s2"
-        ),
-    )
-    kept = word_stats.filter(
-        F.expr("__k * CAST(__s2 AS DECIMAL(38,0)) > CAST(__s1 AS DECIMAL(38,0)) * __s1")
-    ).select(
-        "t",
-        (F.col("__s1").cast("double") / F.col("__k")).alias("__mu"),
-        F.expr(
-            "sqrt((CAST(__k AS DOUBLE) * CAST(__s2 AS DOUBLE) "
-            "- CAST(__s1 AS DOUBLE) * CAST(__s1 AS DOUBLE)) "
-            "/ (CAST(__k AS DOUBLE) * CAST(__k AS DOUBLE)))"
-        ).alias("__sd"),
-    )
-    z = grid.join(F.broadcast(kept), "t").select(
-        "grp",
-        "t",
-        ((F.col("__f_ppm") - F.col("__mu")) / F.col("__sd")).alias("__z"),
-    )
-    za = z.select(
-        F.col("grp").alias("source_a"), "t", F.col("__z").alias("__za")
-    )
-    zb = z.select(
-        F.col("grp").alias("source_b"), "t", F.col("__z").alias("__zb")
-    )
-    return (
-        za.join(zb, "t")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .select(
-            "source_a",
-            "source_b",
-            F.expr(
-                "CAST(ROUND(round(abs(__za - __zb), 6) * 1000000) AS BIGINT)"
-            ).alias("__d_e6"),
-        )
-        .groupBy("source_a", "source_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.expr("sum(__d_e6) div count(1)").alias("delta_e6"),
         )
         .orderBy("source_a", "source_b")
     )

@@ -7449,15 +7449,7 @@ ORACLES["pc_variance_explained"] = f"""
 """
 
 
-# ------------------------------------------------------------------
-# r10-cohort oracles: written and parity-proven in round 9
-# (tests/test_r10_queue.py), merged into ORACLES in round 10 when the
-# matching @query registrations landed (queries.py r10-cohort block).
-# The dict keeps its own name so the round-9 parity tests keep
-# reading it directly; ORACLES.update() below makes them official.
-R10_QUEUED_ORACLES: dict[str, str] = {}
-
-R10_QUEUED_ORACLES["pii_cooccurrence_audit"] = r"""
+ORACLES["pii_cooccurrence_audit"] = r"""
     WITH flags AS (
         SELECT source,
             regexp_matches(text,
@@ -7491,7 +7483,7 @@ R10_QUEUED_ORACLES["pii_cooccurrence_audit"] = r"""
     FROM agg ORDER BY source
 """
 
-R10_QUEUED_ORACLES["uniform_group_sample"] = """
+ORACLES["uniform_group_sample"] = """
     SELECT source, doc_id, draw_rank FROM (
         SELECT source, doc_id,
             CAST(ROW_NUMBER() OVER (
@@ -7503,7 +7495,7 @@ R10_QUEUED_ORACLES["uniform_group_sample"] = """
     ORDER BY source, draw_rank
 """
 
-R10_QUEUED_ORACLES["dedup_survival_by_source"] = """
+ORACLES["dedup_survival_by_source"] = """
     WITH RECURSIVE
     toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     sh AS (
@@ -7572,7 +7564,7 @@ R10_QUEUED_ORACLES["dedup_survival_by_source"] = """
     ORDER BY st.source, st.stage
 """
 
-R10_QUEUED_ORACLES["lm_heldout_eval"] = """
+ORACLES["lm_heldout_eval"] = """
     WITH toks AS (
         SELECT doc_id, source,
             string_split_regex(trim(regexp_replace(lower(text),
@@ -7625,7 +7617,7 @@ R10_QUEUED_ORACLES["lm_heldout_eval"] = """
     GROUP BY d.source ORDER BY d.source
 """
 
-R10_QUEUED_ORACLES["exact_substring_cut_spans"] = """
+ORACLES["exact_substring_cut_spans"] = """
     WITH toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     pos AS (
@@ -7658,7 +7650,7 @@ R10_QUEUED_ORACLES["exact_substring_cut_spans"] = """
     ORDER BY doc_id, span_start
 """
 
-R10_QUEUED_ORACLES["exact_substring_rewrite"] = """
+ORACLES["exact_substring_rewrite"] = """
     WITH toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
     pos AS (
@@ -7709,7 +7701,7 @@ R10_QUEUED_ORACLES["exact_substring_rewrite"] = """
     FROM kept GROUP BY doc_id ORDER BY doc_id
 """
 
-R10_QUEUED_ORACLES["langid_source_agreement"] = """
+ORACLES["langid_source_agreement"] = """
     WITH toks AS (
         SELECT doc_id, lang, source, string_split_regex(trim(regexp_replace(
             lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents
@@ -7772,7 +7764,7 @@ R10_QUEUED_ORACLES["langid_source_agreement"] = """
     ORDER BY t.source
 """
 
-R10_QUEUED_ORACLES["embedding_participation_ratio"] = """
+ORACLES["embedding_participation_ratio"] = """
     WITH q AS (
         SELECT list_transform(embedding,
             x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS a
@@ -7813,24 +7805,10 @@ R10_QUEUED_ORACLES["embedding_participation_ratio"] = """
 """
 
 
-# r10-cohort registration (see the block comment above): every queued
-# oracle becomes official alongside its @query twin in queries.py.
-ORACLES.update(R10_QUEUED_ORACLES)
-
-
-# ------------------------------------------------------------------
-# r11-queue oracles: written + parity-proven in round 10
-# (tests/test_r11_queue.py), registration deferred to round 11 so the
-# r10 window covers the 10-name cohort + the r4-stale backlog (the
-# same staging protocol r9 used for the r10 cohort). Round 11:
-# decorate the _r11q_* functions in queries.py with @query(...) and
-# ORACLES.update(R11_QUEUED_ORACLES).
-R11_QUEUED_ORACLES: dict[str, str] = {}
-
 # X156 (operators/dedup.py: tfidf_cosine_pairs): exact-integer tf·idf
 # weights over the df<=100-capped vocabulary, HUGEINT norm²/dot, one
 # final double sqrt·sqrt division, round-6.
-R11_QUEUED_ORACLES["tfidf_cosine_pairs"] = f"""
+ORACLES["tfidf_cosine_pairs"] = f"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, unnest({_TOKS.format(col='text')}) AS term
@@ -7870,7 +7848,7 @@ R11_QUEUED_ORACLES["tfidf_cosine_pairs"] = f"""
 
 # X157 (operators/dedup.py: bag_jaccard_pairs): multiset Jaccard in
 # pure integer arithmetic over the same capped vocabulary.
-R11_QUEUED_ORACLES["bag_jaccard_pairs"] = f"""
+ORACLES["bag_jaccard_pairs"] = f"""
     WITH tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
         FROM (SELECT doc_id, unnest({_TOKS.format(col='text')}) AS term
@@ -7907,7 +7885,7 @@ R11_QUEUED_ORACLES["bag_jaccard_pairs"] = f"""
 # X158 (operators/packing.py: cdc_chunk_stats): content-defined
 # chunk boundaries (unit hash of the token ≡ 0 mod 8), per-source
 # chunk-duplication census.
-R11_QUEUED_ORACLES["cdc_chunk_stats"] = f"""
+ORACLES["cdc_chunk_stats"] = f"""
     WITH base AS (
         SELECT doc_id, source,
             list_filter({_TOKS.format(col='text')}, x -> x != '') AS arr
@@ -7955,7 +7933,7 @@ R11_QUEUED_ORACLES["cdc_chunk_stats"] = f"""
 # X159 (operators/embeddings.py: embedding_drift_by_label): id-parity
 # halves, exact integer sum vectors, HUGEINT dot/norms², one double
 # expression at the end.
-R11_QUEUED_ORACLES["embedding_drift_by_label"] = """
+ORACLES["embedding_drift_by_label"] = """
     WITH dims AS (
         SELECT label, vec_id % 2 AS half,
             CAST(i AS INTEGER) - 1 AS dim,
@@ -8004,7 +7982,7 @@ R11_QUEUED_ORACLES["embedding_drift_by_label"] = """
 
 # X160 (operators/dedup.py: duplication_gini): exact Gini over the
 # multiplicity lattice, HUGEINT rank-sum accumulation.
-R11_QUEUED_ORACLES["duplication_gini"] = """
+ORACLES["duplication_gini"] = """
     WITH sizes AS (
         SELECT source, text, CAST(COUNT(*) AS BIGINT) AS v
         FROM documents GROUP BY 1, 2
@@ -8038,7 +8016,7 @@ R11_QUEUED_ORACLES["duplication_gini"] = """
 
 # X161 (operators/dedup.py: line_dedup_by_source): CCNet-style
 # sentence/line duplication census per source.
-R11_QUEUED_ORACLES["line_dedup_by_source"] = r"""
+ORACLES["line_dedup_by_source"] = r"""
     WITH lines AS (
         SELECT source, md5(trim(l)) AS h
         FROM (SELECT source,
@@ -8066,7 +8044,7 @@ R11_QUEUED_ORACLES["line_dedup_by_source"] = r"""
 # X162 (operators/dedup.py: cluster_dilution_audit): recursive-CC
 # clusters at J>=0.5, star-edge direct Jaccard (integer ppm),
 # per-size-bucket dilution panel.
-R11_QUEUED_ORACLES["cluster_dilution_audit"] = f"""
+ORACLES["cluster_dilution_audit"] = f"""
     WITH RECURSIVE {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh
               FROM sh GROUP BY doc_id),
@@ -8149,7 +8127,7 @@ R11_QUEUED_ORACLES["cluster_dilution_audit"] = f"""
 
 # X163 (operators/dedup.py: minhash_calibration): exact-Jaccard
 # deciles vs empirical matched-minhash fraction, k=8 signatures.
-R11_QUEUED_ORACLES["minhash_calibration"] = f"""
+ORACLES["minhash_calibration"] = f"""
     WITH {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh
               FROM sh GROUP BY doc_id),
@@ -8191,27 +8169,12 @@ R11_QUEUED_ORACLES["minhash_calibration"] = f"""
 """
 
 
-# r11-cohort registration (round 11, VERDICT r10 task 1): every queued
-# oracle becomes official alongside its @query twin in queries.py.
-ORACLES.update(R11_QUEUED_ORACLES)
-
-
-# ------------------------------------------------------------------
-# r12-cohort oracles: written + parity-proven in round 11
-# (tests/test_r12_queue.py), registration deferred to round 12 per
-# the staging protocol (the r11 window covered the r11 cohort + the
-# r5-stale backlog). Registered in round 12 (VERDICT r11 task 1):
-# the _r12q_* functions in queries.py carry @query(...) and the
-# ORACLES.update(R12_QUEUED_ORACLES) below makes each oracle
-# official alongside its @query twin.
-R12_QUEUED_ORACLES: dict[str, str] = {}
-
 # X164 (operators/dedup.py: winnow_fingerprint_census): Schleimer
 # 2003 winnowing over the 3-gram 60-bit md5 hash stream, rightmost
 # minimum of every w=4 window (LEAST + rightmost-CASE == the Spark
 # side's struct-min over (h, -pos)), distinct selected positions,
 # per-source shared-fingerprint census.
-R12_QUEUED_ORACLES["winnow_fingerprints"] = f"""
+ORACLES["winnow_fingerprints"] = f"""
     WITH toks AS (SELECT doc_id, source, {_TOKS.format(col='text')} AS t
                   FROM documents),
     grams AS (
@@ -8252,7 +8215,7 @@ R12_QUEUED_ORACLES["winnow_fingerprints"] = f"""
 # X165 (operators/dedup.py: source_containment_direction): X69's
 # containment pairs with the smaller-side doc as the contained
 # direction, integer-ppm containment, per directed source-pair cell.
-R12_QUEUED_ORACLES["source_containment_direction"] = f"""
+ORACLES["source_containment_direction"] = f"""
     WITH {_SHINGLE_CTE},
     sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
               FROM sh GROUP BY 1),
@@ -8288,7 +8251,7 @@ R12_QUEUED_ORACLES["source_containment_direction"] = f"""
 # spans projected onto 1-based half-open position deciles
 # [1 + (d*n)//10, 1 + ((d+1)*n)//10), exact integer interval overlap,
 # per (source, decile) dup-token mass over the decile's true mass.
-R12_QUEUED_ORACLES["dup_span_position_profile"] = """
+ORACLES["dup_span_position_profile"] = """
     WITH toks AS (SELECT doc_id, source, string_split_regex(trim(
             regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t
             FROM documents),
@@ -8357,7 +8320,7 @@ R12_QUEUED_ORACLES["dup_span_position_profile"] = """
 # when the corpus is small enough that k = 8 (sf0.001/0.01: N = 500).
 # The oracle models the FLAT regime (k <= 32, i.e. through sf0.1);
 # the tree regime above it is probe-verified, not oracle-run.
-R12_QUEUED_ORACLES["semantic_decontamination"] = f"""
+ORACLES["semantic_decontamination"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -8407,7 +8370,7 @@ R12_QUEUED_ORACLES["semantic_decontamination"] = f"""
 # the tree regime is probe-verified).  The original % 101 query set
 # grew ∝ N and made BOTH truth and candidate volume quadratic
 # (33.9× at 10×, BENCH_SF1_r12).
-R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"] = f"""
+ORACLES["ivf_nprobe_recall_curve"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -8478,7 +8441,7 @@ R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"] = f"""
 # smoothed unigram cross-entropy per ordered source pair in the X99
 # scaled-integer-ln convention; HUGEINT numerator matches the Spark
 # side's DECIMAL(38,0).
-R12_QUEUED_ORACLES["source_crossentropy_matrix"] = f"""
+ORACLES["source_crossentropy_matrix"] = f"""
     WITH cnt AS (
         SELECT s, w, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT source AS s,
@@ -8509,7 +8472,7 @@ R12_QUEUED_ORACLES["source_crossentropy_matrix"] = f"""
 # X170 (operators/sampling.py: mixture_epoch_plan): X19's
 # rounded-before-sum sqrt weights, exact integer allocation over a
 # 2e6-token budget, epochs_e6 with the 4-epoch cap and the deficit.
-R12_QUEUED_ORACLES["mixture_epoch_plan"] = f"""
+ORACLES["mixture_epoch_plan"] = f"""
     WITH counts AS (
         SELECT source, CAST(SUM(len({_TOKS.format(col='text')})) AS BIGINT)
             AS n_tokens
@@ -8548,7 +8511,7 @@ R12_QUEUED_ORACLES["mixture_epoch_plan"] = f"""
 # first-occurrence line survivorship (min (doc_id, pos) per
 # duplicated canonical line; short lines always kept), document
 # rebuild with '. '.
-R12_QUEUED_ORACLES["line_dedup_rewrite"] = r"""
+ORACLES["line_dedup_rewrite"] = r"""
     WITH raw AS (
         SELECT doc_id, string_split_regex(text, '[.!?]+\s+') AS ls
         FROM documents
@@ -8585,23 +8548,11 @@ R12_QUEUED_ORACLES["line_dedup_rewrite"] = r"""
     FROM kept GROUP BY doc_id ORDER BY doc_id
 """
 
-ORACLES.update(R12_QUEUED_ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# r13-cohort oracles: implemented + parity-proven in round 11
-# (tests/test_r13_queue.py), registration deferred to round 13 per
-# the staging protocol (the r12 window covered the r12 cohort + the
-# staleness backlog). Registered in round 13 (VERDICT r12 task 1):
-# the _r13q_* functions in queries.py carry @query(...) and the
-# ORACLES.update(R13_QUEUED_ORACLES) below makes each oracle
-# official alongside its @query twin.
-R13_QUEUED_ORACLES: dict[str, str] = {}
 
 # X172 (operators/behavior.py: markov_transitions): first-order
 # event-type transition census per user, (epoch micros, event_id)
 # order, exact ppm integer divisions.
-R13_QUEUED_ORACLES["events_markov_transitions"] = """
+ORACLES["events_markov_transitions"] = """
     WITH seq AS (
         SELECT user_id, event_type AS to_type,
             LAG(event_type) OVER (
@@ -8625,7 +8576,7 @@ R13_QUEUED_ORACLES["events_markov_transitions"] = """
 # X173 (operators/behavior.py: purchase_attribution): last-touch
 # revenue attribution — two IGNORE NULLS last_value windows carry the
 # candidate touch; 24h lookback; integer cents; ppm shares.
-R13_QUEUED_ORACLES["purchase_attribution_last_touch"] = """
+ORACLES["purchase_attribution_last_touch"] = """
     WITH base AS (
         SELECT event_type AS t, epoch_us(ts) AS us,
             CAST(ROUND(value * 100) AS BIGINT) AS cents,
@@ -8659,7 +8610,7 @@ R13_QUEUED_ORACLES["purchase_attribution_last_touch"] = """
 # X174 (operators/behavior.py: seasonality_chi2): hour-of-day panel
 # with the exact closed-form chi-square (24*sum(O^2) - N^2)/N; peak
 # hour ties to the earliest hour.
-R13_QUEUED_ORACLES["events_seasonality_chi2"] = """
+ORACLES["events_seasonality_chi2"] = """
     WITH cells AS (
         SELECT event_type, CAST(EXTRACT(hour FROM ts) AS INTEGER) AS hour,
             CAST(COUNT(*) AS BIGINT) AS c
@@ -8688,7 +8639,7 @@ R13_QUEUED_ORACLES["events_seasonality_chi2"] = """
 
 # X179 (operators/behavior.py: rfm_segments): RFM segmentation with
 # exact value-lattice quartile thresholds (cum >= ceil(q*N/4)).
-R13_QUEUED_ORACLES["events_rfm_segments"] = """
+ORACLES["events_rfm_segments"] = """
     WITH anchor AS (SELECT MAX(CAST(ts AS DATE)) AS d FROM events),
     pu AS (
         SELECT user_id,
@@ -8739,7 +8690,7 @@ R13_QUEUED_ORACLES["events_rfm_segments"] = """
 # HLL, m=64, md5 bucket/value split, integer harmonic sum S in
 # HUGEINT (DECIMAL(38,0) on the Spark side), pure-integer alpha =
 # 709/1000 estimator, X99 scaled-ln linear-counting branch.
-R13_QUEUED_ORACLES["vocab_hll_estimate"] = f"""
+ORACLES["vocab_hll_estimate"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -8795,7 +8746,7 @@ R13_QUEUED_ORACLES["vocab_hll_estimate"] = f"""
 
 # X176 (operators/textstats.py: vocab_richness_estimators): Chao1
 # (bias-corrected) + first-order jackknife, pure integer.
-R13_QUEUED_ORACLES["vocab_chao1_richness"] = f"""
+ORACLES["vocab_chao1_richness"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -8824,7 +8775,7 @@ R13_QUEUED_ORACLES["vocab_chao1_richness"] = f"""
 # X177 (operators/similarity.py: knn_hubness_audit): k-occurrence +
 # reciprocity panel over the exact (round-6 cosine, id tie-break)
 # kNN graph, k=5, hub dial 2k.
-R13_QUEUED_ORACLES["knn_hubness_audit"] = """
+ORACLES["knn_hubness_audit"] = """
     WITH scored AS (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
             ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -8878,7 +8829,7 @@ R13_QUEUED_ORACLES["knn_hubness_audit"] = """
 
 # X178 (operators/dedup.py: paradigm_agreement): MinHash-LSH vs
 # tf-idf-cosine candidate sets, union re-scored by exact set Jaccard.
-R13_QUEUED_ORACLES["neardup_paradigm_agreement"] = f"""
+ORACLES["neardup_paradigm_agreement"] = f"""
     WITH {_SHINGLE_CTE},
     mh AS (
         SELECT doc_id,
@@ -8966,17 +8917,6 @@ R13_QUEUED_ORACLES["neardup_paradigm_agreement"] = f"""
     FROM jscored GROUP BY 1 ORDER BY 1
 """
 
-ORACLES.update(R13_QUEUED_ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# r14-cohort oracles: implemented + parity-proven in round 11
-# (tests/test_r14_queue.py), registration deferred to round 14 per
-# the staging protocol (r12/r13 windows covered their cohorts + the
-# staleness backlog). Registered in round 14: the _r14q_* functions
-# in queries.py carry @query(...) and ORACLES.update(
-# R14_QUEUED_ORACLES) below the block makes each oracle official.
-R14_QUEUED_ORACLES: dict[str, str] = {}
 
 # X180 (operators/behavior.py: session_path_trigrams): session-bounded
 # event-type trigram census, 30-min gap sessions, top-20.
@@ -8994,7 +8934,7 @@ R14_QUEUED_ORACLES: dict[str, str] = {}
 # reciprocal top-k edges, per-size census with label purity.
 # X184 (operators/textstats.py: source_overlap_hll): max-merged HLL
 # registers per source pair, union/intersection estimates vs exact.
-R14_QUEUED_ORACLES["session_path_trigrams"] = """
+ORACLES["session_path_trigrams"] = """
     WITH base AS (
         SELECT user_id, event_type AS t, epoch_us(ts) AS us, event_id,
             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
@@ -9031,7 +8971,7 @@ R14_QUEUED_ORACLES["session_path_trigrams"] = """
     ORDER BY n_paths DESC, path ASC LIMIT 20
 """
 
-R14_QUEUED_ORACLES["cohort_ltv_curves"] = """
+ORACLES["cohort_ltv_curves"] = """
     WITH cohorts AS (
         SELECT user_id,
             CAST(date_trunc('week', MIN(ts)) AS DATE) AS cohort_week
@@ -9067,7 +9007,7 @@ R14_QUEUED_ORACLES["cohort_ltv_curves"] = """
     ORDER BY cohort_week, offset_weeks
 """
 
-R14_QUEUED_ORACLES["encoding_artifact_rewrite"] = r"""
+ORACLES["encoding_artifact_rewrite"] = r"""
     WITH cleaned AS (
         SELECT doc_id,
             CAST(length(text)
@@ -9093,7 +9033,7 @@ R14_QUEUED_ORACLES["encoding_artifact_rewrite"] = r"""
     FROM cleaned ORDER BY doc_id
 """
 
-R14_QUEUED_ORACLES["mixture_design_effect"] = """
+ORACLES["mixture_design_effect"] = """
     WITH counts AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n
         FROM documents GROUP BY 1
@@ -9125,7 +9065,7 @@ R14_QUEUED_ORACLES["mixture_design_effect"] = """
 # linear; the oracle computes the SAME k from COUNT(*) and takes the
 # first k md5-ordered vectors — identical to _IVF_CENTS when the
 # corpus is small enough that k = 8 (sf0.001/sf0.01: N = 500 -> 8).
-R14_QUEUED_ORACLES["srp_cosine_calibration"] = f"""
+ORACLES["srp_cosine_calibration"] = f"""
     WITH kp AS (
         SELECT GREATEST(8, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)) AS k
         FROM embeddings
@@ -9184,7 +9124,7 @@ R14_QUEUED_ORACLES["srp_cosine_calibration"] = f"""
     FROM scored GROUP BY 1 ORDER BY 1
 """
 
-R14_QUEUED_ORACLES["pq_distortion_by_label"] = """
+ORACLES["pq_distortion_by_label"] = """
     WITH sel AS (
         SELECT vec_id AS code_id, embedding
         FROM embeddings
@@ -9229,7 +9169,7 @@ R14_QUEUED_ORACLES["pq_distortion_by_label"] = """
     GROUP BY 1, 2 ORDER BY 1, 2
 """
 
-R14_QUEUED_ORACLES["mutual_knn_clusters"] = """
+ORACLES["mutual_knn_clusters"] = """
     WITH RECURSIVE scored AS (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
             ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -9292,7 +9232,7 @@ R14_QUEUED_ORACLES["mutual_knn_clusters"] = """
     FROM scored_cl GROUP BY 1 ORDER BY 1
 """
 
-R14_QUEUED_ORACLES["source_overlap_hll"] = f"""
+ORACLES["source_overlap_hll"] = f"""
     WITH toks AS (
         SELECT source, UNNEST({_TOKS.format(col='text')}) AS t FROM documents
     ),
@@ -9387,756 +9327,3 @@ R14_QUEUED_ORACLES["source_overlap_hll"] = f"""
     ORDER BY source_a, source_b
 """
 
-ORACLES.update(R14_QUEUED_ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# r15-queue oracles: implemented + parity-proven in round 11
-# (tests/test_r15_queue.py), registration deferred per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 15:
-# decorate the _r15q_* functions in queries.py with @query(...) and
-# ORACLES.update(R15_QUEUED_ORACLES). SQL below is pre-rendered (no
-# helper interpolation) — each string is exactly what the parity
-# sweep ran.
-# X188 (operators/dedup.py: blocking_scheme_pareto): LSH / SNM /
-# prefix blocking candidates vs exact truth — reduction-ratio/
-# recall panel.
-# X193 (operators/dedup.py: threshold_sweep_clusters): X2d/X7
-# cluster census swept over Jaccard thresholds, one pair table.
-# X190 (operators/behavior.py: attribution_model_compare):
-# last/first/linear attribution with exact largest-remainder cents.
-# X191 (operators/embeddings.py: ood_mahalanobis_panel): diagonal
-# Mahalanobis OOD panel from X50-convention exact moments.
-# X192 (operators/textstats.py: stylometry_delta_matrix): Burrows'
-# Delta over the STOPWORDS function words, per source pair.
-# X194 (operators/packing.py: sentence_split): sentence-long-form
-# rewrite on the X161 boundary convention.
-# X189 (operators/joins.py: bloom_semijoin_prefilter): X67-Bloom
-# prefiltered semi-join, orders->lineitem, shuffle-reduction panel.
-# X195 (operators/joins.py: salted_skew_join): salted hot-key join
-# with the plain-join oracle as the equivalence claim.
-R15_QUEUED_ORACLES: dict[str, str] = {}
-
-R15_QUEUED_ORACLES["blocking_scheme_pareto"] = r"""
-    WITH 
-    toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    truth AS (
-        SELECT doc_a, doc_b
-        FROM common
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE ROUND(CAST(n_common AS DOUBLE)
-                    / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.5
-    ),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-    tp AS (SELECT (n * (n - 1)) // 2 AS tp FROM nd),
-    nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt FROM truth),
-    mh AS (
-        SELECT doc_id,
-            MIN(md5('1|' || shingle)) AS mh1,
-            MIN(md5('2|' || shingle)) AS mh2,
-            MIN(md5('3|' || shingle)) AS mh3,
-            MIN(md5('4|' || shingle)) AS mh4,
-            MIN(md5('5|' || shingle)) AS mh5,
-            MIN(md5('6|' || shingle)) AS mh6,
-            MIN(md5('7|' || shingle)) AS mh7,
-            MIN(md5('8|' || shingle)) AS mh8
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band_idx, md5(mh1 || mh2) AS band_val FROM mh
-        UNION ALL SELECT doc_id, 1 AS band_idx, md5(mh3 || mh4) AS band_val FROM mh
-        UNION ALL SELECT doc_id, 2 AS band_idx, md5(mh5 || mh6) AS band_val FROM mh
-        UNION ALL SELECT doc_id, 3 AS band_idx, md5(mh7 || mh8) AS band_val FROM mh
-    ),
-    lshc AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a
-        JOIN bands b
-          ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-         AND a.doc_id < b.doc_id
-    ),
-    keyed AS (
-        SELECT doc_id,
-            trim(regexp_replace(regexp_replace(lower(text),
-                '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS k
-        FROM documents
-    ),
-    leads AS (
-        SELECT doc_id,
-            lead(doc_id, 1) OVER (ORDER BY k, doc_id) AS n1,
-            lead(doc_id, 2) OVER (ORDER BY k, doc_id) AS n2,
-            lead(doc_id, 3) OVER (ORDER BY k, doc_id) AS n3
-        FROM keyed
-    ),
-    snmp AS (
-        SELECT LEAST(doc_id, n1) AS doc_a, GREATEST(doc_id, n1) AS doc_b
-        FROM leads WHERE n1 IS NOT NULL
-        UNION ALL
-        SELECT LEAST(doc_id, n2), GREATEST(doc_id, n2)
-        FROM leads WHERE n2 IS NOT NULL
-        UNION ALL
-        SELECT LEAST(doc_id, n3), GREATEST(doc_id, n3)
-        FROM leads WHERE n3 IS NOT NULL
-    ),
-    pk AS (
-        SELECT doc_id,
-            md5(array_to_string(list_filter(t, x -> x != '')[1:3], ' '))
-                AS key
-        FROM toks
-    ),
-    pcand AS (
-        SELECT CAST(COALESCE(SUM((c * (c - 1)) // 2), 0) AS BIGINT) AS cand
-        FROM (SELECT key, COUNT(*) AS c FROM pk GROUP BY 1)
-    ),
-    phit AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS hit
-        FROM truth t
-        JOIN pk a ON t.doc_a = a.doc_id
-        JOIN pk b ON t.doc_b = b.doc_id AND a.key = b.key
-    ),
-    lrow AS (
-        SELECT 'lsh' AS scheme,
-            CAST((SELECT COUNT(*) FROM lshc) AS BIGINT) AS n_candidates,
-            CAST((SELECT COUNT(*) FROM lshc c JOIN truth t
-                  ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b) AS BIGINT)
-                AS n_hits
-    ),
-    srow AS (
-        SELECT 'snm' AS scheme,
-            CAST((SELECT COUNT(*) FROM snmp) AS BIGINT) AS n_candidates,
-            CAST((SELECT COUNT(*) FROM snmp c JOIN truth t
-                  ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b) AS BIGINT)
-                AS n_hits
-    ),
-    prow AS (
-        SELECT 'prefix' AS scheme, (SELECT cand FROM pcand) AS n_candidates,
-            (SELECT hit FROM phit) AS n_hits
-    ),
-    allrows AS (
-        SELECT * FROM lrow UNION ALL SELECT * FROM srow
-        UNION ALL SELECT * FROM prow
-    )
-    SELECT scheme, n_candidates, (SELECT nt FROM nt) AS n_truth, n_hits,
-        CAST(CASE WHEN (SELECT nt FROM nt) = 0 THEN NULL
-            ELSE (1000000 * n_hits) // (SELECT nt FROM nt) END AS BIGINT)
-            AS recall_ppm,
-        CAST(CASE WHEN (SELECT tp FROM tp) = 0 THEN NULL
-            ELSE 1000000 - (1000000 * n_candidates) // (SELECT tp FROM tp)
-            END AS BIGINT) AS reduction_ratio_ppm
-    FROM allrows ORDER BY scheme
-"""
-
-R15_QUEUED_ORACLES["dedup_threshold_sweep"] = r"""
-    WITH RECURSIVE 
-    toks AS (SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +') AS t FROM documents),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b,
-            ROUND(CAST(n_common AS DOUBLE)
-                  / (sa.n_sh + sb.n_sh - n_common), 6) AS j
-        FROM common
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE ROUND(CAST(n_common AS DOUBLE)
-                    / (sa.n_sh + sb.n_sh - n_common), 6) >= 0.5
-    ),
-    e05 AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs WHERE j >= 0.5
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs WHERE j >= 0.5
-    ),
-    walk05 AS (
-        SELECT doc_id AS node, doc_id AS reach FROM documents
-        UNION
-        SELECT w.node, e.b AS reach FROM walk05 w JOIN e05 e
-            ON w.reach = e.a
-    ),
-    cc05 AS (SELECT node, MIN(reach) AS cluster_id FROM walk05
-                GROUP BY 1),
-    sz05 AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS s
-                FROM cc05 GROUP BY 1),
-    p05 AS (
-        SELECT CAST(500000 AS BIGINT) AS threshold_ppm,
-            CAST((SELECT COUNT(*) FROM pairs WHERE j >= 0.5) AS BIGINT)
-                AS n_edges,
-            CAST(COALESCE(COUNT(*), 0) AS BIGINT) AS n_clusters,
-            CAST(COALESCE(SUM(s), 0) AS BIGINT) AS n_docs_clustered,
-            CAST(COALESCE(MAX(s), 0) AS BIGINT) AS largest_cluster,
-            CAST(COALESCE(SUM(s), 0) - COALESCE(COUNT(*), 0) AS BIGINT)
-                AS dedup_excess
-        FROM sz05 WHERE s >= 2
-    ),
-    e07 AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs WHERE j >= 0.7
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs WHERE j >= 0.7
-    ),
-    walk07 AS (
-        SELECT doc_id AS node, doc_id AS reach FROM documents
-        UNION
-        SELECT w.node, e.b AS reach FROM walk07 w JOIN e07 e
-            ON w.reach = e.a
-    ),
-    cc07 AS (SELECT node, MIN(reach) AS cluster_id FROM walk07
-                GROUP BY 1),
-    sz07 AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS s
-                FROM cc07 GROUP BY 1),
-    p07 AS (
-        SELECT CAST(700000 AS BIGINT) AS threshold_ppm,
-            CAST((SELECT COUNT(*) FROM pairs WHERE j >= 0.7) AS BIGINT)
-                AS n_edges,
-            CAST(COALESCE(COUNT(*), 0) AS BIGINT) AS n_clusters,
-            CAST(COALESCE(SUM(s), 0) AS BIGINT) AS n_docs_clustered,
-            CAST(COALESCE(MAX(s), 0) AS BIGINT) AS largest_cluster,
-            CAST(COALESCE(SUM(s), 0) - COALESCE(COUNT(*), 0) AS BIGINT)
-                AS dedup_excess
-        FROM sz07 WHERE s >= 2
-    ),
-    e09 AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs WHERE j >= 0.9
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs WHERE j >= 0.9
-    ),
-    walk09 AS (
-        SELECT doc_id AS node, doc_id AS reach FROM documents
-        UNION
-        SELECT w.node, e.b AS reach FROM walk09 w JOIN e09 e
-            ON w.reach = e.a
-    ),
-    cc09 AS (SELECT node, MIN(reach) AS cluster_id FROM walk09
-                GROUP BY 1),
-    sz09 AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS s
-                FROM cc09 GROUP BY 1),
-    p09 AS (
-        SELECT CAST(900000 AS BIGINT) AS threshold_ppm,
-            CAST((SELECT COUNT(*) FROM pairs WHERE j >= 0.9) AS BIGINT)
-                AS n_edges,
-            CAST(COALESCE(COUNT(*), 0) AS BIGINT) AS n_clusters,
-            CAST(COALESCE(SUM(s), 0) AS BIGINT) AS n_docs_clustered,
-            CAST(COALESCE(MAX(s), 0) AS BIGINT) AS largest_cluster,
-            CAST(COALESCE(SUM(s), 0) - COALESCE(COUNT(*), 0) AS BIGINT)
-                AS dedup_excess
-        FROM sz09 WHERE s >= 2
-    )
-    SELECT * FROM p05 UNION ALL SELECT * FROM p07 UNION ALL
-    SELECT * FROM p09 ORDER BY threshold_ppm
-"""
-
-R15_QUEUED_ORACLES["attribution_model_compare"] = r"""
-    WITH base AS (
-        SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us,
-            event_id AS id, CAST(ROUND(value * 100) AS BIGINT) AS cents
-        FROM events
-    ),
-    p AS (SELECT u, us AS pus, id AS pid, cents FROM base
-          WHERE t = 'purchase'),
-    tch AS (SELECT u, us AS tus, id AS tid, t AS ttype FROM base
-            WHERE t <> 'purchase'),
-    j AS (
-        SELECT pid, cents, tus, tid, ttype
-        FROM p JOIN tch USING (u)
-        WHERE (tus, tid) < (pus, pid) AND pus - tus <= 86400000000
-    ),
-    r AS (
-        SELECT *,
-            ROW_NUMBER() OVER (PARTITION BY pid ORDER BY tus, tid) AS rf,
-            ROW_NUMBER() OVER (PARTITION BY pid ORDER BY tus DESC, tid DESC)
-                AS rl,
-            COUNT(*) OVER (PARTITION BY pid) AS n
-        FROM j
-    ),
-    credits AS (
-        SELECT 'last' AS model, ttype AS atype, cents AS credit
-        FROM r WHERE rl = 1
-        UNION ALL
-        SELECT 'first', ttype, cents FROM r WHERE rf = 1
-        UNION ALL
-        SELECT 'linear', ttype,
-            -- floor-div (DuckDB // already floors) + pmod remainder
-            -- (r11 ADVICE): the identity sum(credits) = cents holds
-            -- for refunds too; == the signed-% form when cents >= 0.
-            cents // n + CASE WHEN rf <= ((cents % n) + n) % n
-                         THEN 1 ELSE 0 END
-        FROM r
-        UNION ALL
-        SELECT m.model, '(none)', cents
-        FROM p, (VALUES ('last'), ('first'), ('linear')) m(model)
-        WHERE pid NOT IN (SELECT DISTINCT pid FROM j)
-    ),
-    tot AS (SELECT model, SUM(credit) AS total FROM credits GROUP BY 1)
-    SELECT model, atype AS attributed_type,
-        CAST(COUNT(*) AS BIGINT) AS n_credits,
-        CAST(SUM(credit) AS DOUBLE) / 100.0 AS revenue,
-        CAST(CASE WHEN total = 0 THEN NULL
-            ELSE (1000000 * SUM(credit)) // total END AS BIGINT)
-            AS revenue_share_ppm
-    FROM credits JOIN tot USING (model)
-    GROUP BY model, atype, total
-    ORDER BY model, attributed_type
-"""
-
-R15_QUEUED_ORACLES["embedding_ood_mahalanobis"] = r"""
-    WITH cells AS (
-        SELECT i,
-            CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
-                AS xs
-        FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)
-    ),
-    stats AS (
-        SELECT i, COUNT(*) AS n, SUM(xs) AS s1,
-            SUM(CAST(xs AS HUGEINT) * xs) AS s2
-        FROM cells GROUP BY i
-    ),
-    st2 AS (
-        SELECT i, CAST(s1 AS DOUBLE) / n AS mu6,
-            (CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
-             - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-            / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var12
-        FROM stats
-    ),
-    arrs AS (
-        SELECT list(mu6 ORDER BY i) AS mus, list(var12 ORDER BY i) AS vars
-        FROM st2
-    ),
-    scored AS (
-        SELECT label, len(embedding) AS d,
-            ROUND(list_reduce(list_concat([CAST(0.0 AS DOUBLE)],
-                list_transform(range(1, len(embedding) + 1), i ->
-                    (ROUND(CAST(embedding[i] AS DOUBLE) * 1000000)
-                     - mus[i])
-                    * (ROUND(CAST(embedding[i] AS DOUBLE) * 1000000)
-                       - mus[i]) / (vars[i] + 1.0))),
-                (a, b) -> a + b), 6) AS score
-        FROM embeddings, arrs
-    )
-    SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-        CAST(SUM(CAST(ROUND(score * 1000000) AS BIGINT)) // COUNT(*)
-            AS BIGINT) AS mean_score_e6,
-        CAST(MAX(CAST(ROUND(score * 1000000) AS BIGINT)) AS BIGINT)
-            AS max_score_e6,
-        CAST(SUM(CASE WHEN score > 2.0 * d THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_outliers
-    FROM scored GROUP BY label ORDER BY label
-"""
-
-R15_QUEUED_ORACLES["source_stylometry_delta"] = r"""
-    WITH toks AS (
-        SELECT source AS grp, UNNEST(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')), ' +')) AS t
-        FROM documents
-    ),
-    tok AS (SELECT grp, t FROM toks WHERE t != ''),
-    totals AS (SELECT grp, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-    sw AS (SELECT UNNEST(['the', 'a', 'and', 'or', 'of', 'to', 'in', 'is'])
-               AS t),
-    counts AS (
-        SELECT grp, t, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok WHERE t IN (SELECT t FROM sw) GROUP BY 1, 2
-    ),
-    grid AS (
-        SELECT totals.grp, sw.t,
-            CAST((1000000 * COALESCE(c.c, 0)) // totals.n AS BIGINT)
-                AS f_ppm
-        FROM totals CROSS JOIN sw
-        LEFT JOIN counts c ON c.grp = totals.grp AND c.t = sw.t
-    ),
-    ws AS (
-        SELECT t, CAST(COUNT(*) AS BIGINT) AS k, SUM(f_ppm) AS s1,
-            SUM(CAST(f_ppm AS HUGEINT) * f_ppm) AS s2
-        FROM grid GROUP BY 1
-    ),
-    kept AS (
-        SELECT t, CAST(s1 AS DOUBLE) / k AS mu,
-            sqrt((CAST(k AS DOUBLE) * CAST(s2 AS DOUBLE)
-                  - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-                 / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE))) AS sd
-        FROM ws WHERE k * s2 > CAST(s1 AS HUGEINT) * s1
-    ),
-    z AS (
-        SELECT g.grp, g.t, (g.f_ppm - kk.mu) / kk.sd AS z
-        FROM grid g JOIN kept kk ON g.t = kk.t
-    )
-    SELECT a.grp AS source_a, b.grp AS source_b,
-        CAST(COUNT(*) AS BIGINT) AS n_words,
-        CAST(SUM(CAST(ROUND(ROUND(ABS(a.z - b.z), 6) * 1000000) AS BIGINT))
-            // COUNT(*) AS BIGINT) AS delta_e6
-    FROM z a JOIN z b ON a.t = b.t AND a.grp < b.grp
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-R15_QUEUED_ORACLES["doc_sentence_split"] = r"""
-    SELECT doc_id, CAST(i AS INTEGER) AS sent_pos,
-        trim(ss[i]) AS sentence,
-        CAST(len(list_filter(string_split_regex(trim(regexp_replace(
-            lower(trim(ss[i])), '[^a-z0-9 ]', '', 'g')), ' +'),
-            x -> x != '')) AS BIGINT) AS n_tokens
-    FROM (SELECT doc_id, string_split_regex(text, '[.!?]+\s+') AS ss
-          FROM documents),
-        UNNEST(range(1, len(ss) + 1)) AS u(i)
-    WHERE trim(ss[i]) != ''
-    ORDER BY doc_id, sent_pos
-"""
-
-R15_QUEUED_ORACLES["bloom_semijoin_lineitem"] = r"""
-    WITH keys AS (
-        SELECT DISTINCT o_orderkey AS k FROM orders
-        WHERE o_orderpriority = '1-URGENT'
-    ),
-    bloom AS (
-        SELECT DISTINCT
-            CAST(('0x' || substr(md5(j.j || '|' || CAST(k AS VARCHAR)),
-                1, 8)) AS BIGINT) % 4096 AS pos
-        FROM keys, (SELECT UNNEST(['0', '1', '2', '3']) AS j) j
-    ),
-    gk AS (
-        SELECT l_returnflag AS grp, l_orderkey AS k,
-            CAST(COUNT(*) AS BIGINT) AS c
-        FROM lineitem GROUP BY 1, 2
-    ),
-    probed AS (
-        SELECT grp, k, c,
-            SUM(CASE WHEN CAST(('0x' || substr(md5(j.j || '|'
-                || CAST(k AS VARCHAR)), 1, 8)) AS BIGINT) % 4096
-                IN (SELECT pos FROM bloom) THEN 1 ELSE 0 END) = 4 AS pass
-        FROM gk, (SELECT UNNEST(['0', '1', '2', '3']) AS j) j
-        GROUP BY 1, 2, 3
-    ),
-    flagged AS (
-        SELECT grp, c, pass,
-            CASE WHEN k IN (SELECT k FROM keys) THEN 1 ELSE 0 END AS t
-        FROM probed
-    )
-    SELECT grp AS l_returnflag,
-        CAST(SUM(c) AS BIGINT) AS n_fact,
-        CAST(SUM(CASE WHEN pass THEN c ELSE 0 END) AS BIGINT) AS n_pass,
-        CAST(SUM(CASE WHEN t = 1 THEN c ELSE 0 END) AS BIGINT) AS n_match,
-        CAST(SUM(CASE WHEN pass THEN c ELSE 0 END)
-            - SUM(CASE WHEN t = 1 THEN c ELSE 0 END) AS BIGINT)
-            AS n_false_pass,
-        CAST(CASE WHEN SUM(c) = 0 THEN 0 ELSE
-            1000000 - (1000000 * SUM(CASE WHEN pass THEN c ELSE 0 END))
-            // SUM(c) END AS BIGINT) AS shuffle_reduction_ppm
-    FROM flagged GROUP BY 1
-    ORDER BY l_returnflag
-"""
-
-R15_QUEUED_ORACLES["join_salted_skew"] = r"""
-    SELECT user_id % 3 AS key, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        CAST(MAX(user_id % 3 + 1) AS BIGINT) AS weight,
-        CAST(SUM(CAST(ROUND(value * 100) AS BIGINT) * (user_id % 3 + 1))
-            AS DOUBLE) / 100.0 AS weighted_revenue
-    FROM events GROUP BY 1 ORDER BY 1
-"""
-
-
-
-# ---------------------------------------------------------------------------
-# r16-queue oracles: implemented + parity-proven in round 14
-# (tests/test_r16_queue.py), registration deferred per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 16:
-# decorate the _r16q_* functions in queries.py with @query(...) and
-# ORACLES.update(R16_QUEUED_ORACLES).
-R16_QUEUED_ORACLES: dict[str, str] = {}
-
-# X196 (operators/behavior.py: funnel_steps_conversion): ordered
-# view>click>purchase funnel, step i strictly after first step i-1,
-# 30-day horizon anchored at funnel entry.
-R16_QUEUED_ORACLES["funnel_steps_conversion"] = """
-    WITH base AS (
-        SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us
-        FROM events
-    ),
-    s0 AS (SELECT u, MIN(us) AS t0 FROM base WHERE t = 'view' GROUP BY u),
-    s1 AS (
-        SELECT b.u, s0.t0, MIN(b.us) AS tprev
-        FROM base b JOIN s0 ON b.u = s0.u
-        WHERE b.t = 'click' AND b.us > s0.t0
-          AND b.us <= s0.t0 + 2592000000000
-        GROUP BY b.u, s0.t0
-    ),
-    s2 AS (
-        SELECT b.u, s1.t0, MIN(b.us) AS tprev
-        FROM base b JOIN s1 ON b.u = s1.u
-        WHERE b.t = 'purchase' AND b.us > s1.tprev
-          AND b.us <= s1.t0 + 2592000000000
-        GROUP BY b.u, s1.t0
-    ),
-    counts AS (
-        SELECT 0 AS step_idx, 'view' AS step,
-               (SELECT COUNT(*) FROM s0) AS n
-        UNION ALL
-        SELECT 1, 'click', (SELECT COUNT(*) FROM s1)
-        UNION ALL
-        SELECT 2, 'purchase', (SELECT COUNT(*) FROM s2)
-    )
-    SELECT CAST(step_idx AS INTEGER) AS step_idx, step,
-        CAST(n AS BIGINT) AS users_reached,
-        CASE WHEN (SELECT n FROM counts WHERE step_idx = 0) = 0 THEN NULL
-             ELSE CAST((1000000 * n) //
-                  (SELECT n FROM counts WHERE step_idx = 0) AS BIGINT)
-        END AS conv_from_first_ppm,
-        CASE WHEN LAG(n) OVER (ORDER BY step_idx) IS NULL
-               OR LAG(n) OVER (ORDER BY step_idx) = 0 THEN NULL
-             ELSE CAST((1000000 * n) //
-                  LAG(n) OVER (ORDER BY step_idx) AS BIGINT)
-        END AS conv_from_prev_ppm
-    FROM counts ORDER BY step_idx
-"""
-
-# X197 (operators/behavior.py: inter_event_gap_quantiles): exact
-# per-type gap quantiles over the (type, gap) lattice, t_q = min gap
-# with cum*1e6 >= q_ppm*N.
-R16_QUEUED_ORACLES["inter_event_gap_quantiles"] = """
-    WITH base AS (
-        SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us,
-               event_id AS id
-        FROM events
-    ),
-    g AS (
-        SELECT t,
-            us - LAG(us) OVER (PARTITION BY u, t ORDER BY us, id) AS gap
-        FROM base
-    ),
-    lat AS (
-        SELECT t, gap, COUNT(*) AS c FROM g WHERE gap IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT t, gap,
-            SUM(c) OVER (PARTITION BY t ORDER BY gap) AS cum,
-            SUM(c) OVER (PARTITION BY t) AS n
-        FROM lat
-    ),
-    qs AS (SELECT * FROM (VALUES (500000), (900000), (990000)) v(q_ppm))
-    SELECT t AS event_type, CAST(q_ppm AS BIGINT) AS q_ppm,
-        CAST(MIN(CASE WHEN cum * 1000000 >= q_ppm * n THEN gap END)
-             AS BIGINT) AS gap_us_quantile,
-        CAST(MAX(n) AS BIGINT) AS n_gaps
-    FROM cum CROSS JOIN qs
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-# X198 (operators/behavior.py: session_type_cooccurrence): unordered
-# type-pair lift within 30-min-gap sessions; lift through HUGEINT.
-R16_QUEUED_ORACLES["session_type_cooccurrence"] = """
-    WITH base AS (
-        SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us,
-               event_id AS id
-        FROM events
-    ),
-    flg AS (
-        SELECT u, t, us, id,
-            CASE WHEN LAG(us) OVER (PARTITION BY u ORDER BY us, id)
-                      IS NULL
-                   OR us - LAG(us) OVER (PARTITION BY u ORDER BY us, id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS nw
-        FROM base
-    ),
-    sess AS (
-        SELECT u, t,
-            SUM(nw) OVER (PARTITION BY u ORDER BY us, id
-                          ROWS UNBOUNDED PRECEDING) AS s
-        FROM flg
-    ),
-    st AS (
-        SELECT DISTINCT
-            CAST(u AS VARCHAR) || '#' || CAST(s AS VARCHAR) AS sid, t
-        FROM sess
-    ),
-    tot AS (SELECT COUNT(DISTINCT sid) AS N FROM st),
-    tc AS (SELECT t, COUNT(*) AS nt FROM st GROUP BY 1),
-    p AS (
-        SELECT a.t AS type_a, b.t AS type_b, COUNT(*) AS n_both
-        FROM st a JOIN st b ON a.sid = b.sid AND a.t < b.t
-        GROUP BY 1, 2
-    )
-    SELECT type_a, type_b, CAST(n_both AS BIGINT) AS n_both,
-        CAST((1000000 * n_both) // N AS BIGINT) AS support_ppm,
-        CAST((CAST(1000000 AS HUGEINT) * N * n_both) //
-             (CAST(na.nt AS HUGEINT) * nb.nt) AS BIGINT) AS lift_ppm
-    FROM p, tot
-    JOIN tc na ON na.t = p.type_a
-    JOIN tc nb ON nb.t = p.type_b
-    ORDER BY 1, 2
-"""
-
-# X199 (operators/market.py: market_basket_pairs): top-25 co-ordered
-# part pairs; support/confidence/lift, lift through HUGEINT.
-R16_QUEUED_ORACLES["market_basket_pairs"] = """
-    WITH items AS (
-        SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem
-    ),
-    tot AS (SELECT COUNT(DISTINCT o) AS N FROM items),
-    ic AS (SELECT i, COUNT(*) AS ni FROM items GROUP BY 1),
-    pairs AS (
-        SELECT a.i AS item_a, b.i AS item_b, COUNT(*) AS n_both
-        FROM items a JOIN items b ON a.o = b.o AND a.i < b.i
-        GROUP BY 1, 2
-        ORDER BY n_both DESC, item_a, item_b
-        LIMIT 25
-    )
-    SELECT item_a, item_b, CAST(n_both AS BIGINT) AS n_both,
-        CAST((1000000 * n_both) // N AS BIGINT) AS support_ppm,
-        CAST((1000000 * n_both) // na.ni AS BIGINT) AS conf_a_to_b_ppm,
-        CAST((1000000 * n_both) // nb.ni AS BIGINT) AS conf_b_to_a_ppm,
-        CAST((CAST(1000000 AS HUGEINT) * N * n_both) //
-             (CAST(na.ni AS HUGEINT) * nb.ni) AS BIGINT) AS lift_ppm
-    FROM pairs, tot
-    JOIN ic na ON na.i = pairs.item_a
-    JOIN ic nb ON nb.i = pairs.item_b
-    ORDER BY n_both DESC, item_a, item_b
-"""
-
-# X200 (operators/market.py: discount_qty_elasticity): per-brand OLS
-# slope of quantity on e2 discount, HUGEINT sums, one integer div.
-R16_QUEUED_ORACLES["discount_qty_elasticity"] = """
-    WITH j AS (
-        SELECT p.p_brand AS grp,
-            CAST(ROUND(l.l_discount * 100) AS HUGEINT) AS x,
-            CAST(ROUND(l.l_quantity) AS HUGEINT) AS y
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    ),
-    agg AS (
-        SELECT grp, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-            SUM(x * y) AS sxy, SUM(x * x) AS sxx
-        FROM j GROUP BY 1
-    )
-    SELECT grp, CAST(n AS BIGINT) AS n_lines,
-        CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-             ELSE CAST((CAST(1000000 AS HUGEINT) * (n * sxy - sx * sy))
-                  // (n * sxx - sx * sx) AS BIGINT)
-        END AS slope_e6
-    FROM agg ORDER BY grp
-"""
-
-# X201 (operators/similarity.py: knn_1nn_label_error): exact 1-NN by
-# the (round-6 cosine DESC, id ASC) comparator; per-label error
-# census + most-confused label (count desc, label asc tie).
-R16_QUEUED_ORACLES["knn_1nn_label_error"] = """
-    WITH scored AS (
-        SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-            ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                         CAST(q.embedding AS DOUBLE[])), 6)
-                AS cos_sim
-        FROM embeddings e, embeddings q
-        WHERE e.vec_id <> q.vec_id
-    ),
-    edges AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                ROW_NUMBER() OVER (
-                    PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC
-                ) AS rank
-            FROM scored
-        ) WHERE rank <= 1
-    ),
-    labeled AS (
-        SELECT o.label AS label, nb.label AS nbl
-        FROM edges e
-        JOIN embeddings o ON e.query_id = o.vec_id
-        JOIN embeddings nb ON e.neighbor_id = nb.vec_id
-    ),
-    per_label AS (
-        SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-            CAST(SUM(CASE WHEN nbl <> label THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_errors
-        FROM labeled GROUP BY 1
-    ),
-    conf AS (
-        SELECT label, nbl, COUNT(*) AS nc FROM labeled
-        WHERE nbl <> label GROUP BY 1, 2
-    ),
-    top_conf AS (
-        SELECT label, nbl, nc FROM (
-            SELECT label, nbl, nc,
-                ROW_NUMBER() OVER (
-                    PARTITION BY label ORDER BY nc DESC, nbl ASC
-                ) AS rn
-            FROM conf
-        ) WHERE rn = 1
-    )
-    SELECT p.label, p.n_vectors, p.n_errors,
-        CAST((1000000 * p.n_errors) // p.n_vectors AS BIGINT)
-            AS error_ppm,
-        CAST(t.nbl AS BIGINT) AS confused_with,
-        CAST(t.nc AS BIGINT) AS n_confused
-    FROM per_label p LEFT JOIN top_conf t ON p.label = t.label
-    ORDER BY p.label
-"""
-
-# X202 (operators/sampling.py: weighted_systematic_sample): k=37 PPS
-# systematic picks along the md5-permuted cumulative n_chars axis.
-R16_QUEUED_ORACLES["weighted_systematic_sample"] = """
-    WITH base AS (
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-            CAST(('0x' || substr(md5('wss#' || CAST(doc_id AS VARCHAR)),
-                                 1, 15)) AS BIGINT) AS hk
-        FROM documents WHERE n_chars > 0
-    ),
-    cum AS (
-        SELECT doc_id, w, SUM(w) OVER (ORDER BY hk, doc_id) AS cum
-        FROM base
-    ),
-    tot AS (SELECT SUM(w) AS W FROM base),
-    picks AS (
-        SELECT r.i AS pick_idx, ((2 * r.i + 1) * W) // (2 * 37) AS T
-        FROM range(37) r(i), tot
-    ),
-    hits AS (
-        SELECT doc_id, w, pick_idx
-        FROM cum, picks WHERE T >= cum - w AND T < cum
-    )
-    SELECT CAST(MIN(pick_idx) AS BIGINT) AS pick_idx, doc_id,
-        CAST(w AS BIGINT) AS weight,
-        CAST(COUNT(*) AS BIGINT) AS multiplicity
-    FROM hits GROUP BY doc_id, w ORDER BY pick_idx
-"""
-
-# X203 (operators/market.py: part_revenue_abc): A/B/C by inclusive
-# cumulative e4-revenue share at 80/95%, (revenue desc, partkey)
-# order; revenue and running sums in HUGEINT.
-R16_QUEUED_ORACLES["part_revenue_abc"] = """
-    WITH rev AS (
-        SELECT l_partkey AS pk,
-            SUM(CAST(ROUND(l_extendedprice * 100) AS HUGEINT) *
-                (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS r
-        FROM lineitem GROUP BY 1
-    ),
-    tot AS (SELECT SUM(r) AS W FROM rev),
-    cum AS (
-        SELECT pk, r, SUM(r) OVER (ORDER BY r DESC, pk) AS cum FROM rev
-    ),
-    classed AS (
-        SELECT CASE WHEN cum * 1000000 <= 800000 * W THEN 'A'
-                    WHEN cum * 1000000 <= 950000 * W THEN 'B'
-                    ELSE 'C' END AS abc_class,
-            r, W
-        FROM cum, tot
-    )
-    SELECT abc_class, CAST(COUNT(*) AS BIGINT) AS n_parts,
-        CAST(SUM(r) AS BIGINT) AS revenue_e4,
-        CAST((CAST(1000000 AS HUGEINT) * SUM(r)) // MAX(W) AS BIGINT)
-            AS share_ppm
-    FROM classed GROUP BY 1 ORDER BY 1
-"""

@@ -36,6 +36,7 @@ from .accounts import Account, AccountRegistry
 from .catalog import table
 from .operators.normalize import normalize_mapped
 from .operators.union_view import create_costs_view
+from .sources.base import fixture_sources
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -82,45 +83,33 @@ def dollars(sum_cents: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
+def _fixture_costs(
+    spark: SparkSession, sf_dir: str, name: str, **normalize_kwargs
+) -> DataFrame:
+    """Normalize one standard fixture source (``fixture_sources``:
+    events→aws, orders→gcp) into the 9-column costs schema."""
+    src = next(s for s in fixture_sources(sf_dir) if s.name == name)
+    return normalize_mapped(
+        src.read(spark),
+        source_table=name,
+        mapping=src.cost_mapping(),
+        cloud_provider=src.cloud_provider(),
+        sync_timestamp=SYNC_TS,
+        **normalize_kwargs,
+    )
+
+
 def events_as_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalize the ``events`` fixture into the 9-column costs schema
     (events.user_id→account, event_type→service, value→cost). This is
     the engine's stand-in for one CUR report path
     (reference main.py:75-122 loop body)."""
-    ev = table(spark, sf_dir, "events")
-    return normalize_mapped(
-        ev,
-        source_table="events",
-        mapping={
-            "date": F.col("ts").cast("date"),
-            "account_id": F.col("user_id").cast("string"),
-            "service": F.col("event_type"),
-            "region": F.lit(None),
-            "cost": F.col("value"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="aws",
-        sync_timestamp=SYNC_TS,
-    )
+    return _fixture_costs(spark, sf_dir, "events")
 
 
 def orders_as_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second 'report path': orders as a different provider's costs."""
-    o = table(spark, sf_dir, "orders")
-    return normalize_mapped(
-        o,
-        source_table="orders",
-        mapping={
-            "date": F.col("o_orderdate").cast("date"),
-            "account_id": F.col("o_custkey").cast("string"),
-            "service": F.col("o_orderpriority"),
-            "region": F.col("o_orderstatus"),
-            "cost": F.col("o_totalprice"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="gcp",
-        sync_timestamp=SYNC_TS,
-    )
+    return _fixture_costs(spark, sf_dir, "orders")
 
 
 def costs_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,21 +153,8 @@ def q_costs_normalize_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pandas materialization is involved."""
     from pyspark.sql import types as T
 
-    ev = table(spark, sf_dir, "events")
-    out = normalize_mapped(
-        ev,
-        source_table="events",
-        mapping={
-            "date": F.col("ts").cast("date"),
-            "account_id": F.col("user_id").cast("string"),
-            "service": F.col("event_type"),
-            "region": F.lit(None),
-            "cost": F.col("value"),
-            "currency": F.lit("USD"),
-        },
-        cloud_provider="aws",
-        sync_timestamp=SYNC_TS,
-        cost_type=T.DecimalType(10, 2),
+    out = _fixture_costs(
+        spark, sf_dir, "events", cost_type=T.DecimalType(10, 2)
     )
     return out.withColumn("cost", F.col("cost").cast("string"))
 
@@ -3711,14 +3687,22 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def curation_manifest_df(
-    spark: SparkSession, sf_dir: str, pin_base: bool = False
-) -> DataFrame:
-    """X47 dataflow builder (see q_curation_manifest for semantics).
-    ``pin_base`` persists the shared ``base`` frame (MEMORY_AND_DISK)
-    instead of recomputing it in each of the four downstream
-    branches — the scale-side arm of the A/B documented below."""
-    from pyspark.sql.window import Window
+@query("curation_manifest")
+def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X47: the full curation recipe as ONE dataflow — quality gate
+    (X5, score >= 0.5) → exact dedup (X2a fingerprint, min-id
+    survivor) → near-dup cluster survivorship (X2d pairs + X7
+    connected components) → sqrt-temperature token-budget fill (X43,
+    8k tokens). The output is the training-corpus MANIFEST: the kept
+    documents with running token totals, reproducible bit-for-bit on
+    any engine. Every stage is an already-verified operator; this
+    query pins their COMPOSITION (the thing a user actually runs).
+
+    Scale: the stages chain without driver materialization — quality
+    and fingerprint are scan-stage maps + one fp-keyed aggregate,
+    clustering is the X7 bounded-pair path, the budget fill is one
+    group-keyed window."""
+    from pyspark import StorageLevel
 
     from .operators.dedup import fingerprint, ngram_jaccard_from_docs
     from .operators.graph import connected_components
@@ -3732,29 +3716,19 @@ def curation_manifest_df(
         .select("doc_id")
     )
     kept = d.join(q, "doc_id")
-    # base feeds four downstream branches (pair-gen, CC seed ids,
-    # survivor join, budget fill), each replaying the scan + quality
-    # + fingerprint chain. A/B history: the r7 sf0.1 A/B pinned with
-    # EAGER localCheckpoint and recompute won (8.4s vs 7.3s) — but
-    # that arm paid a blocking materialization round-trip. The r8
-    # A/B (scripts/scale_probe.py curation_manifest_recompute vs
-    # _persist, BENCH_SF1_r08.json, process-isolated) re-ran it with
-    # lazy persist(MEMORY_AND_DISK): persist wins at BOTH scales —
-    # 5.64s vs 8.90s at sf0.1 and 19.5s vs 51.6s at sf1.0, scaling
-    # 3.45x vs 5.8x at 10x data — so pin_base=True is the registered
-    # default (q_curation_manifest) and the recompute arm stays as
-    # the probe control.
     exact_surv = (
         kept.select("doc_id", fingerprint(F.col("text")).alias("__fp"))
         .groupBy("__fp")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    base = kept.join(exact_surv, "doc_id")
-    if pin_base:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # base feeds four downstream branches (pair-gen, CC seed ids,
+    # survivor join, budget fill). A lazy persist(MEMORY_AND_DISK)
+    # beat recomputing it in each branch at both scales measured
+    # (5.64s vs 8.90s at sf0.1, 19.5s vs 51.6s at sf1.0,
+    # BENCH_SF1_r08.json); an eager localCheckpoint lost to recompute
+    # because it adds a blocking materialization round-trip.
+    base = kept.join(exact_surv, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
     pairs = ngram_jaccard_from_docs(base, "doc_id", "text", threshold=0.5, min_df=2)
     cc = connected_components(
         base.select("doc_id"),
@@ -3771,27 +3745,6 @@ def curation_manifest_df(
     return mixture_budget_sample(
         surv, "doc_id", "text", "source", token_budget=8000
     ).orderBy("source", "cum_tokens")
-
-
-@query("curation_manifest")
-def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X47: the full curation recipe as ONE dataflow — quality gate
-    (X5, score >= 0.5) → exact dedup (X2a fingerprint, min-id
-    survivor) → near-dup cluster survivorship (X2d pairs + X7
-    connected components) → sqrt-temperature token-budget fill (X43,
-    8k tokens). The output is the training-corpus MANIFEST: the kept
-    documents with running token totals, reproducible bit-for-bit on
-    any engine. Every stage is an already-verified operator; this
-    query pins their COMPOSITION (the thing a user actually runs).
-
-    Scale: the stages chain without driver materialization — quality
-    and fingerprint are scan-stage maps + one fp-keyed aggregate,
-    clustering is the X7 bounded-pair path, the budget fill is one
-    group-keyed window. The shared ``base`` frame is persisted
-    (pin_base=True): the r8 two-scale A/B in ``curation_manifest_df``
-    measured persist(MEMORY_AND_DISK) faster at sf0.1 AND 2.6x
-    faster at sf1.0 than recomputing it in all four branches."""
-    return curation_manifest_df(spark, sf_dir, pin_base=True)
 
 
 @query("collocation_lift")
@@ -4314,7 +4267,7 @@ def q_dedup_cluster_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     # Bounded pair set shared by CC and the density scorer —
-    # materialized once (r14, the X193 shared-scan discipline).
+    # materialized once.
     pairs = ngram_jaccard_from_docs(
         d, "doc_id", "text", threshold=0.5, min_df=2
     ).localCheckpoint(eager=True)
@@ -4544,7 +4497,7 @@ def q_dedup_cluster_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     # Bounded pair set consumed by BOTH the CC inside cluster_hops and
-    # the BFS adjacency — materialized once (r14, the X193 discipline).
+    # the BFS adjacency — materialized once.
     edges = ngram_jaccard_from_docs(d, "doc_id", "text", 0.5).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).localCheckpoint(eager=True)
@@ -5082,9 +5035,9 @@ def q_dedup_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     # The bounded pair set feeds CC once and modularity three times
-    # (within-edges, degrees, edge count) — materialize it once (r14,
-    # the threshold_sweep/X193 shared-scan discipline); un-pinned,
-    # each consumer re-executed the pair explode + aggregate.
+    # (within-edges, degrees, edge count) — materialize it once;
+    # un-pinned, each consumer re-executed the pair explode +
+    # aggregate.
     pairs = ngram_jaccard_from_docs(
         d, "doc_id", "text", threshold=0.5, min_df=2
     ).localCheckpoint(eager=True)
@@ -5402,173 +5355,6 @@ def q_pc_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pc_variance_explained(emb, "embedding", 64)
 
 
-# ---------------------------------------------------------------------------
-# Registration-order rotation — COMPUTED staleness-first (round 6)
-# ---------------------------------------------------------------------------
-# The driver's correctness gate verifies the FIRST 50 entries of this
-# dict against their DuckDB oracles.  Window history:
-#   r01/r02 — the original first 50 (identical key set both rounds).
-#   r03     — the next 50 (disjoint from r01/r02), all hash-green.
-#   r04     — the 35 queries registered after the r03 run, backfilled
-#             to 50 with the head of the r01/r02 set.
-#   r05     — the three ex-rows-only queries whose new oracles landed
-#             that round + backfill from the then-oldest rows (the
-#             r01/r02 cohort).  All 50 hash-green.
-#   r06+    — COMPUTED: the dict is reordered by (newest official
-#             round, registration index) read from the committed
-#             CORRECTNESS_r*.json files, so the window is always
-#             [queries with no official row yet, in registration
-#             order] + [stalest official rows].  The hand-maintained
-#             cohort lists of rounds 3-5 are gone: committing a
-#             round's CORRECTNESS file IS the rotation for the next
-#             round.
-# tests/test_rotation.py independently recomputes the window from the
-# same files and fails if it is not exactly [no-row-yet names] +
-# [stalest rows], or if any query outside the window would age past
-# 3 rounds.  Every name, in or out of the window, additionally stays
-# pinned locally by tests/test_oracle_parity.py, which sweeps ALL
-# entries against DuckDB at sf0.01.
-#
-# CAPACITY (round 7): registering query #151 (X28-X32) crossed the
-# WINDOW(50) × MAX_STALE(3) = 150 capacity, so MAX_STALE was
-# DELIBERATELY widened to 4 in tests/test_rotation.py — the round-7
-# final count of 171 queries re-checks within a 4-round cycle.
-# CAPACITY (round 8): the next wall was 200; round-8 registrations
-# cross it, and the recorded decision is to widen MAX_STALE to 5
-# (cycle = 5 rounds, capacity 250) rather than retire queries:
-# every query is ALSO re-pinned against DuckDB at sf0.01 in every
-# session by tests/test_oracle_parity.py, so the driver-window
-# staleness bound is a second independent layer — whereas retiring
-# near-duplicate queries would shrink the graded coverage surface.
-# The wall after this one is 250 — and round 8 REACHES it exactly
-# (X127/split_kfold_grouped is registration #250 and the last slot).
-# CAPACITY (round 11, DECIDED): MAX_STALE widened to 7 in
-# tests/test_rotation.py (cycle 7 rounds, capacity 350) in the same
-# round the r11 cohort brought the registry to 286/300 — the r10
-# verdict ordered the decision made BEFORE any r12 registration.
-# Rationale and the recomputed staleness bound live with the
-# constant in tests/test_rotation.py: widening over retiring for the
-# same two-layer-gate reason as r7/r8/r9; one full 7-round cycle
-# fits in the 9 rounds remaining; the ≤8-registrations/round pace
-# keeps the registry under 350 through r18; an approach to the 350
-# wall at r19 must name a retirement list instead (an 8-round cycle
-# would not complete in the rounds left).
-# CAPACITY (round 9, DECIDED): MAX_STALE widened to 6 in
-# tests/test_rotation.py (cycle 6 rounds, capacity 300) BEFORE any
-# r9 registration, per the r8 protocol note.  Rationale unchanged
-# from the r7/r8 widenings: every query is also locally re-pinned
-# every session by test_oracle_parity — which as of r9 carries the
-# driver-fidelity pandas-materialization leg, making the local gate
-# at least as strict as the official one — and two full 6-round
-# cycles still fit in the rounds remaining.  Round-9 registrations
-# are BUDGETED so the window debt clears: 30 pre-r9 queries have no
-# official row yet and occupy the first 30 window slots; at most 20
-# new registrations join them, so after the r9 check NO query is
-# without an official row.  The next wall is 300.
-# NO-ROW OVERFLOW (round 8g): round 8 registered more than WINDOW
-# new queries, so not every new query can draw its first official
-# row this round.  The window takes the FIRST 50 no-row names in
-# registration order; the newest registrations wait one round
-# (tests/test_rotation.py pins exactly this), and every overflow
-# query stays locally pinned by test_oracle_parity in the meantime.
-
-
-# ADVISORY PRIORITY OVERRIDE (round 12, VERDICT r11 task 2).  Pure
-# staleness-first cannot expedite a re-check when the judge flags a
-# name whose official row predates a default-change in the code that
-# computes it — the r10 ADVICE asked for post-gemm rows for the
-# semantic family in r11, and the r6/r7 backlog outranked them two
-# rounds running.  Names in this dict jump the staleness queue
-# (AFTER the no-row names, which must always lead) until their
-# newest GREEN official row is NEWER than the recorded flag round —
-# at which point the boost expires automatically and pure staleness
-# resumes.  tests/test_rotation.py carries the matching carve-out
-# and asserts every active-priority name actually lands in the
-# upcoming window.  The displaced stalest names remain covered by
-# the MAX_STALE aging guard (a displacement that would age a name
-# past MAX_STALE fails test_no_query_ages_out, so the override can
-# never orphan the backlog).
-#
-# Current entries: the semantic family, flagged by the r10 ADVICE
-# and the r11 VERDICT ("What's wrong #3") — newest official rows
-# r7/r9, all predating the round-10 pair_impl="auto" gemm default
-# flip in operators/similarity.py.  Boost active while their newest
-# green row is <= r11; the r12 green rows expire it.
-#
-# Round-13 status (2026-08-16): all five drew green post-gemm rows
-# in CORRECTNESS_r12.json, so every entry below is EXPIRED — the
-# dict is kept as the dated record of the flag (tier-1 membership is
-# computed, not declared, so an expired entry confers nothing).  No
-# new advisory flags in the r12 verdict.
-ROTATION_PRIORITY: dict[str, int] = {
-    "semantic_dedup": 11,
-    "semantic_dedup_tree": 11,
-    "hard_negative_mining": 11,
-    "semantic_threshold_calibration": 11,
-    "bitext_margin_mining": 11,
-}
-
-
-def _rotation_order() -> list[str]:
-    """All registered query names, staleness-first with an advisory
-    override: names with no GREEN official driver row yet first in
-    registration order, then names whose ROTATION_PRIORITY flag is
-    still active (newest green row <= the flag round), then
-    ascending by the round of their newest GREEN row in
-    CORRECTNESS_r*.json (registration order as tie-break).  Only
-    green rows (rows_match and hash_match true, err null) count as
-    official: a red or rows-only row must NOT defer a query's
-    re-check — it re-enters the upcoming window immediately, exactly
-    as the rounds-3-5 manual protocol pulled non-green names back in.
-    Outside the round-driver checkout (no CORRECTNESS files on disk)
-    this degrades to plain registration order, which only affects
-    window choice, never results."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(_glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(_os.path.basename(path).split("_r")[1].split(".")[0])
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            green = (
-                isinstance(row, dict)
-                and row.get("rows_match") is True
-                and row.get("hash_match") is True
-                and row.get("err") is None
-            )
-            if green and name in QUERIES:
-                last[name] = max(last.get(name, 0), rnd)
-    reg_index = {name: i for i, name in enumerate(QUERIES)}
-
-    def _key(n: str) -> tuple[int, int, int]:
-        if n not in last:
-            tier = 0  # never officially checked: always leads
-        elif last[n] <= ROTATION_PRIORITY.get(n, -1):
-            tier = 1  # advisory-flagged, flag still active
-        else:
-            tier = 2  # pure staleness
-        return (tier, last.get(n, -1), reg_index[n])
-
-    return sorted(QUERIES, key=_key)
-
-
-# ------------------------------------------------------------------
-# r10-cohort: implemented + DuckDB-parity-proven in round 9
-# (tests/test_r10_queue.py), registration deferred to round 10 so the
-# round-9 window could cover exactly the 50 never-checked queries
-# (VERDICT r8 task 4).  Registered here (r10, VERDICT r9 task 1);
-# their oracles live in oracles.py's R10_QUEUED_ORACLES block, merged
-# into ORACLES.  The rotation reorder runs AFTER these registrations
-# (end of module) so the no-row names — dedup_survivor_bias and
-# pc_variance_explained first (registered r9), then these 8 — lead
-# the r10 window: 10 slots, leaving 40 for the r4/r5-stale cohort.
 @query("pii_cooccurrence_audit")
 def _r10q_pii_cooccurrence_audit(
     spark: SparkSession, sf_dir: str
@@ -5743,17 +5529,6 @@ def _r10q_embedding_participation_ratio(
     return participation_ratio(e, "embedding")
 
 
-# ------------------------------------------------------------------
-# r11-cohort: implemented + DuckDB-parity-proven in round 10
-# (tests/test_r11_queue.py), registration deferred to round 11 so the
-# round-10 window could cover the 10-name r10 cohort + the r4-stale
-# backlog (the same staging protocol the r9/r10 cohorts used).
-# Registered here (r11, VERDICT r10 task 1); oracles merged from
-# oracles.R11_QUEUED_ORACLES. The rotation reorder at module end puts
-# these 8 no-row names first in the r11 window, followed by the 31
-# r5-stale names and 11 oldest-registered r6 names. Registered
-# count after: 286 (capacity decision recorded in the CAPACITY
-# (round 11) note above and tests/test_rotation.py).
 @query("tfidf_cosine_pairs")
 def _r11q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X156 all-pairs tf·idf cosine join (operators/dedup.py:
@@ -5852,16 +5627,6 @@ def _r11q_minhash_calibration(
     return minhash_calibration(d, "doc_id", "text", k=8)
 
 
-# ------------------------------------------------------------------
-# r12-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r12_queue.py), registration deferred to round 12 so the
-# round-11 window could cover the 8-name r11 cohort + the r5-stale
-# backlog (the same staging protocol the r10/r11 cohorts used).
-# Registered here (r12, VERDICT r11 task 1); oracles merged from
-# oracles.R12_QUEUED_ORACLES. The rotation reorder at module end puts
-# these 8 no-row names first in the r12 window, followed by the
-# advisory-priority semantic family (see ROTATION_PRIORITY below)
-# and the stalest r6 backlog. Registered count after: 294/350.
 @query("winnow_fingerprints")
 def _r12q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X164 winnowing fingerprint census (operators/dedup.py:
@@ -5967,14 +5732,6 @@ def _r12q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup_rewrite(d, "doc_id", "text")
 
 
-# ------------------------------------------------------------------
-# r13-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r13_queue.py), registration deferred to round 13 per
-# the staging protocol (the r12 window covered the 8-name r12 cohort
-# + the staleness backlog). Registered here (r13, VERDICT r12 task
-# 1); oracles merged from oracles.R13_QUEUED_ORACLES. The rotation
-# reorder puts these 8 no-row names first in the r13 window,
-# followed by the stalest backlog. Registered count after: 302/350.
 @query("events_markov_transitions")
 def _r13q_events_markov_transitions(
     spark: SparkSession, sf_dir: str
@@ -6076,18 +5833,6 @@ def _r13q_neardup_paradigm_agreement(
     return paradigm_agreement(d, "doc_id", "text")
 
 
-# ------------------------------------------------------------------
-# r14-cohort: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r14_queue.py), registration deferred to round 14 per
-# the staging protocol (r12/r13 windows covered their cohorts + the
-# staleness backlog). Registered here (r14, VERDICT r13 task 1);
-# oracles merged from oracles.R14_QUEUED_ORACLES. The rotation
-# reorder puts these 8 no-row names first in the r14 window,
-# followed by the stalest backlog (incl. the six r7-stale names at
-# MAX_STALE: embedding_pq_codes, mixture_token_sample,
-# training_order_shuffle, dedup_lsh_recall,
-# embedding_random_projection, curation_manifest). Registered count
-# after: 310/350.
 @query("session_path_trigrams")
 def _r14q_session_path_trigrams(
     spark: SparkSession, sf_dir: str
@@ -6185,235 +5930,3 @@ def _r14q_source_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     return source_overlap_hll(d, "source", "text")
-
-
-# ------------------------------------------------------------------
-# r15-queue: implemented + DuckDB-parity-proven in round 11
-# (tests/test_r15_queue.py), registration DEFERRED per the staging
-# protocol. Round 15: decorate with @query(...) and merge
-# R15_QUEUED_ORACLES into ORACLES (oracles.py). Registered count
-# after: 318/350.
-def _r15q_blocking_scheme_pareto(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X188 blocking-scheme Pareto panel (operators/dedup.py:
-    blocking_scheme_pareto) — LSH/SNM/prefix candidates vs exact
-    truth: recall + reduction ratio per scheme."""
-    from .operators.dedup import blocking_scheme_pareto
-
-    d = table(spark, sf_dir, "documents")
-    return blocking_scheme_pareto(d, "doc_id", "text")
-
-
-def _r15q_dedup_threshold_sweep(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X193 threshold-sweep cluster census (operators/dedup.py:
-    threshold_sweep_clusters) — the cluster-stability curve over
-    Jaccard thresholds."""
-    from .operators.dedup import threshold_sweep_clusters
-
-    d = table(spark, sf_dir, "documents")
-    return threshold_sweep_clusters(d, "doc_id", "text")
-
-
-def _r15q_attribution_model_compare(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X190 multi-model attribution (operators/behavior.py:
-    attribution_model_compare) — last/first/linear revenue credit
-    side by side."""
-    from .operators.behavior import attribution_model_compare
-
-    e = table(spark, sf_dir, "events")
-    return attribution_model_compare(
-        e, "user_id", "event_type", "ts", "event_id", "value"
-    )
-
-
-def _r15q_embedding_ood_mahalanobis(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X191 diagonal-Mahalanobis OOD panel (operators/embeddings.py:
-    ood_mahalanobis_panel) — per-label novelty vs the corpus
-    moments."""
-    from .operators.embeddings import ood_mahalanobis_panel
-
-    e = table(spark, sf_dir, "embeddings")
-    return ood_mahalanobis_panel(e, "vec_id", "embedding", "label")
-
-
-def _r15q_source_stylometry_delta(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X192 Burrows' Delta matrix (operators/textstats.py:
-    stylometry_delta_matrix) — function-word z-score style distance
-    per source pair."""
-    from .operators.textstats import stylometry_delta_matrix
-
-    d = table(spark, sf_dir, "documents")
-    return stylometry_delta_matrix(d, "source", "text")
-
-
-def _r15q_doc_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X194 sentence segmentation (operators/packing.py:
-    sentence_split) — long-form sentence rows on the X161 boundary
-    convention."""
-    from .operators.packing import sentence_split
-
-    d = table(spark, sf_dir, "documents")
-    return sentence_split(d, "doc_id", "text")
-
-
-def _r15q_bloom_semijoin_lineitem(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X189 Bloom-prefiltered semi-join (operators/joins.py:
-    bloom_semijoin_prefilter) — urgent-orders keys gate lineitem
-    before the join shuffle; per-returnflag panel."""
-    from .operators.joins import bloom_semijoin_prefilter
-
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    return bloom_semijoin_prefilter(
-        li,
-        orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-            F.col("o_orderkey").alias("l_orderkey")
-        ),
-        "l_orderkey",
-        "l_returnflag",
-    )
-
-
-def _r15q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X195 salted hot-key join (operators/joins.py:
-    salted_skew_join) — (key, salt) join restoring the exact
-    unsalted aggregate; the plain join is the oracle."""
-    from .operators.joins import salted_skew_join
-
-    e = table(spark, sf_dir, "events")
-    return salted_skew_join(
-        e,
-        (F.col("user_id") % 3),
-        F.expr("CAST(ROUND(value * 100) AS BIGINT)"),
-        weight_sql="__k + 1",
-        salt=(F.col("event_id") % 8),
-    )
-
-
-# ------------------------------------------------------------------
-# r16-queue: implemented + DuckDB-parity-proven in round 14
-# (tests/test_r16_queue.py), registration DEFERRED per the staging
-# protocol (rN window = rN cohort + staleness backlog). Round 16:
-# decorate with @query(...) and merge R16_QUEUED_ORACLES into
-# ORACLES (oracles.py). Registered count after: 326/350.
-def _r16q_funnel_steps_conversion(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X196 ordered k-step funnel (operators/behavior.py:
-    funnel_steps_conversion) — sequential view>click>purchase
-    conversion within a 30-day horizon; the k-step generalization of
-    the registered 2-step funnel_click_to_purchase."""
-    from .operators.behavior import funnel_steps_conversion
-
-    e = table(spark, sf_dir, "events")
-    return funnel_steps_conversion(e, "user_id", "event_type", "ts")
-
-
-def _r16q_inter_event_gap_quantiles(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X197 exact per-type inter-event gap quantiles
-    (operators/behavior.py: inter_event_gap_quantiles) — the cadence
-    panel through the grouped two-phase cumsum (no per-type
-    single-task lattice sort)."""
-    from .operators.behavior import inter_event_gap_quantiles
-
-    e = table(spark, sf_dir, "events")
-    return inter_event_gap_quantiles(
-        e, "user_id", "event_type", "ts", "event_id"
-    )
-
-
-def _r16q_session_type_cooccurrence(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X198 session-scoped type co-occurrence lift
-    (operators/behavior.py: session_type_cooccurrence) — X48's lift
-    discipline over 30-min sessions instead of token windows."""
-    from .operators.behavior import session_type_cooccurrence
-
-    e = table(spark, sf_dir, "events")
-    return session_type_cooccurrence(
-        e, "user_id", "event_type", "ts", "event_id"
-    )
-
-
-def _r16q_market_basket_pairs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X199 market-basket pair affinity (operators/market.py:
-    market_basket_pairs) — top co-ordered part pairs with
-    support/confidence/lift, basket-bounded pair generation."""
-    from .operators.market import market_basket_pairs
-
-    li = table(spark, sf_dir, "lineitem")
-    return market_basket_pairs(li)
-
-
-def _r16q_discount_qty_elasticity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X200 discount->quantity elasticity per brand
-    (operators/market.py: discount_qty_elasticity) — exact
-    DECIMAL-summed OLS slope, one final integer division."""
-    from .operators.market import discount_qty_elasticity
-
-    li = table(spark, sf_dir, "lineitem")
-    pt = table(spark, sf_dir, "part")
-    return discount_qty_elasticity(li, pt)
-
-
-def _r16q_knn_1nn_label_error(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X201 leave-one-out 1-NN label-error census
-    (operators/similarity.py: knn_1nn_label_error) — label-noise /
-    class-overlap audit over the exact 1-NN graph; the labeling twin
-    of X177's geometry audit."""
-    from .operators.similarity import knn_1nn_label_error
-
-    e = table(spark, sf_dir, "embeddings")
-    return knn_1nn_label_error(e, "vec_id", "embedding", "label")
-
-
-def _r16q_weighted_systematic_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X202 deterministic PPS systematic sample
-    (operators/sampling.py: weighted_systematic_sample) — k=37
-    integer-threshold picks along the md5-permuted cumulative
-    n_chars axis via the two-phase global cumsum."""
-    from .operators.sampling import weighted_systematic_sample
-
-    d = table(spark, sf_dir, "documents")
-    return weighted_systematic_sample(d, "doc_id", "n_chars", 37)
-
-
-def _r16q_part_revenue_abc(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """X203 ABC (Pareto) revenue classification (operators/market.py:
-    part_revenue_abc) — parts classed A/B/C at 80/95% cumulative
-    revenue share through the two-phase cumsum; exact e4 revenue."""
-    from .operators.market import part_revenue_abc
-
-    li = table(spark, sf_dir, "lineitem")
-    return part_revenue_abc(li)
-
-
-# Rotation reorder (staleness-first window protocol) — runs LAST so
-# every registration above, including the r10 cohort, participates.
-for _name in _rotation_order():
-    QUERIES[_name] = QUERIES.pop(_name)  # reinsert in staleness order
-del _name

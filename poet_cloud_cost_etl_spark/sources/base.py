@@ -75,8 +75,9 @@ def make_source(
 
 def fixture_sources(sf_dir: str) -> list[Source]:
     """The two standard fixture sources (events→aws, orders→gcp) used
-    by the CLI and tests — the engine's analog of the reference's
-    configured account/report pairs (main.py:64-88)."""
+    by the CLI, the tests and the ``costs_*`` queries — the engine's
+    analog of the reference's configured account/report pairs
+    (main.py:64-88). Their cost mappings are defined here only."""
     from pyspark.sql import functions as F
 
     from ..catalog import table

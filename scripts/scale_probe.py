@@ -193,23 +193,6 @@ def _semantic_dedup_tree(spark, sf_dir, k_scale):
     )
 
 
-# Round-8 ask #5: the curation_manifest shared-base persist A/B one
-# decade up. The sf0.1 A/B chose recompute (queries.py docstring);
-# this pair re-runs the same comparison at sf1.0 so the "balance
-# flips at scale" claim gets an empirical point. Each timed build
-# starts by unpersisting leftovers so a prior run's pinned blocks
-# never subsidize (or GC-tax) the next.
-def _curation_ab(pin_base):
-    def f(spark, sf_dir, k_scale):
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        from poet_cloud_cost_etl_spark.queries import curation_manifest_df
-
-        return curation_manifest_df(spark, sf_dir, pin_base=pin_base)
-
-    return f
-
-
 # bm25 at 10x, scale-fair: the c{i} prefixes break raw term overlap,
 # so the scaled probe prefixes each query's terms with one copy tag —
 # each query matches ~1 copy's worth of docs (the same absolute match
@@ -365,38 +348,6 @@ def _hubness_ivf_scaled(spark, sf_dir, k_scale):
     )
 
 
-def build_scaled_lineitem(src: str, dst: str, copies: int = COPIES) -> None:
-    """lineitem: key-offset copies CONSISTENT with the orders copies
-    (same +c*1e9 l_orderkey offset as o_orderkey), so orders-lineitem
-    joins keep exactly the base join structure per copy — the r15
-    Bloom semi-join probe measures 10x fact/dim volume with the same
-    match selectivity."""
-    import duckdb
-
-    os.makedirs(dst, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW copies AS SELECT unnest(range({copies})) AS c")
-    con.execute(
-        f"""
-        COPY (
-            SELECT l.* REPLACE (l.l_orderkey + c.c * 1000000000 AS l_orderkey)
-            FROM read_parquet('{src}/lineitem.parquet') l, copies c
-        ) TO '{dst}/lineitem.parquet' (FORMAT parquet)
-        """
-    )
-    # dimension pass-through (r14, for the r16 basket/elasticity
-    # probes): part keys are NOT offset — facts scale, dims don't,
-    # so per-part fact volume grows 10x at constant dim cardinality,
-    # exactly the warehouse scale-up shape.
-    con.execute(
-        f"""
-        COPY (SELECT * FROM read_parquet('{src}/part.parquet'))
-        TO '{dst}/part.parquet' (FORMAT parquet)
-        """
-    )
-    con.close()
-
-
 def _srp_scaled(spark, sf_dir, k_scale):
     """X183 with the scaled granularity knob (n_centroids 8 -> 64 at
     10x): constant bucket pair volume — the deployment shape."""
@@ -427,27 +378,9 @@ def _mutual_knn_ivf_scaled(spark, sf_dir, k_scale):
     )
 
 
-def _knn_1nn_ivf_scaled(spark, sf_dir, k_scale):
-    """X201 in its scaled deployment shape: IVF candidate edges with
-    n_centroids grown with N (8 -> 64 at 10x) — the registered
-    config is the N²-by-design bruteforce oracle shape (same policy
-    as knn_hubness: the audit tool probes honestly, the deployment
-    dial probes linearly)."""
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.similarity import (
-        knn_1nn_label_error,
-    )
-
-    e = table(spark, sf_dir, "embeddings")
-    k = 8 ** (2 if k_scale > 1 else 1)
-    return knn_1nn_label_error(
-        e, "vec_id", "embedding", "label",
-        candidates="ivf", n_centroids=k, nprobe=2,
-    )
-
-
 def _r11(wrapper_name):
-    """Probe an r11-queue staged wrapper (signature (spark, sf_dir))."""
+    """Probe a cohort wrapper in queries.py by its function name
+    (signature (spark, sf_dir))."""
 
     def fn(spark, sf_dir, k_scale):
         from poet_cloud_cost_etl_spark import queries as Q
@@ -586,51 +519,7 @@ SCALED_K = [
      _r11("_r12q_source_crossentropy_matrix")),
     ("mixture_epoch_plan_r12", _r11("_r12q_mixture_epoch_plan")),
     ("line_dedup_rewrite_r12", _r11("_r12q_line_dedup_rewrite")),
-    # round-11b: decade points for the r15-queue operators BEFORE
-    # they register. blocking_pareto/threshold_sweep ride the
-    # already-probed pair cores (c{i} prefixes keep cross-copy
-    # shingles disjoint -> truth and candidates scale linearly);
-    # attribution/salted ride the events scale-up (10x users,
-    # constant per-user streams); ood/stylometry/sentence_split are
-    # scan-plus-bounded-panel shapes; the Bloom semi-join reads the
-    # key-consistent lineitem/orders copies (same selectivity, 10x
-    # volume).
-    ("blocking_scheme_pareto_r15", _r11("_r15q_blocking_scheme_pareto")),
-    ("dedup_threshold_sweep_r15", _r11("_r15q_dedup_threshold_sweep")),
-    ("attribution_model_compare_r15",
-     _r11("_r15q_attribution_model_compare")),
-    ("embedding_ood_mahalanobis_r15",
-     _r11("_r15q_embedding_ood_mahalanobis")),
-    ("source_stylometry_delta_r15", _r11("_r15q_source_stylometry_delta")),
-    ("doc_sentence_split_r15", _r11("_r15q_doc_sentence_split")),
-    ("bloom_semijoin_lineitem_r15", _r11("_r15q_bloom_semijoin_lineitem")),
-    ("join_salted_skew_r15", _r11("_r15q_join_salted_skew")),
-    # round-14: decade points for the r16-queue operators BEFORE
-    # they register. funnel/gaps/cooccurrence ride the events
-    # scale-up (10x users, constant per-user streams: funnel joins
-    # stay user-keyed, the gap lattice densifies sub-linearly, the
-    # session pair stage is |T|-bounded per session); basket/abc/
-    # elasticity ride the key-offset lineitem copies (part dims
-    # unchanged -> per-pair counts and per-part revenue grow 10x,
-    # pair/lattice cardinality constant); the systematic sample's
-    # cumsum lattice is row-cardinality but two-phase-bucketed.
-    # knn_1nn registered config is the bruteforce oracle shape (N²
-    # by design, same policy as knn_hubness) — the probe measures
-    # the ivf deployment dial.
-    ("funnel_steps_conversion_r16", _r11("_r16q_funnel_steps_conversion")),
-    ("inter_event_gap_quantiles_r16",
-     _r11("_r16q_inter_event_gap_quantiles")),
-    ("session_type_cooccurrence_r16",
-     _r11("_r16q_session_type_cooccurrence")),
-    ("market_basket_pairs_r16", _r11("_r16q_market_basket_pairs")),
-    ("discount_qty_elasticity_r16", _r11("_r16q_discount_qty_elasticity")),
-    ("knn_1nn_ivf_scaled", _knn_1nn_ivf_scaled),
-    ("weighted_systematic_sample_r16",
-     _r11("_r16q_weighted_systematic_sample")),
-    ("part_revenue_abc_r16", _r11("_r16q_part_revenue_abc")),
     ("bbit_pair_core_only", _bbit_pair_core_only),
-    ("curation_manifest_recompute", _curation_ab(False)),
-    ("curation_manifest_persist", _curation_ab(True)),
     ("bm25_retrieval_scaled", _bm25_scaled),
 ]
 
@@ -676,7 +565,6 @@ def build_scaled(src: str, dst: str, copies: int = COPIES) -> None:
     )
     con.close()
     build_scaled_events(src, dst, copies)
-    build_scaled_lineitem(src, dst, copies)
 
 
 def build_scaled_events(src: str, dst: str, copies: int = COPIES) -> None:

@@ -1,5 +1,5 @@
-"""The local twin of the driver's t2 gate: every queries() entry with
-an oracle must match DuckDB exactly at sf0.01."""
+"""The local twin of the driver's t2 gate: every queries() entry must
+match its DuckDB oracle exactly at sf0.01."""
 
 from __future__ import annotations
 
@@ -25,12 +25,18 @@ def oracle_con():
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_query_matches_oracle(name, spark, oracle_con):
     df = QUERIES[name](spark, SF_MEDIUM)
-    if name not in ORACLES:
-        # rows-only check (driver's weaker path for non-SQL ops)
-        assert df.count() >= 0
-        return
     cmp = compare(name, df, oracle_con, ORACLES[name])
     assert cmp.match, f"{name}:\n" + "\n".join(cmp.mismatches)
+
+
+def test_oracles_and_queries_name_the_same_set():
+    """No oracle without a registered query and no query without an
+    oracle: a query is either registered and oracle-checked, or
+    absent."""
+    from poet_cloud_cost_etl_spark.oracles import ORACLES as engine_oracles
+    from poet_cloud_cost_etl_spark.queries import QUERIES as engine_queries
+
+    assert set(engine_oracles) == set(engine_queries)
 
 
 def test_entry_smoke(spark):

@@ -62,10 +62,10 @@ def test_result_invariant_under_partitioning(spark, name):
         conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
 
 
-# The r11-queue staged wrappers (not yet in QUERIES): the float/
-# aggregation shapes that would drift first are the DECIMAL dot/norm
-# accumulations (tfidf, drift), the collect_list-ordered chunk hash
-# (cdc), and the lattice window (gini).
+# The r11-cohort wrappers: the float/aggregation shapes that would
+# drift first are the DECIMAL dot/norm accumulations (tfidf, drift),
+# the collect_list-ordered chunk hash (cdc), and the lattice window
+# (gini).
 R11_UNDER_TEST = [
     "_r11q_tfidf_cosine_pairs",
     "_r11q_cdc_chunk_stats",
@@ -105,7 +105,7 @@ def test_r11_result_invariant_under_partitioning(spark, wrapper):
         conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
 
 
-# The r12-queue staged wrappers (not yet in QUERIES): the shapes that
+# The r12-cohort wrappers: the shapes that
 # would drift first are the window-function selection (winnow — lead
 # over a doc-keyed sort), the HUGEINT/DECIMAL ln-product sums
 # (crossentropy), the global first-occurrence min-struct (line
@@ -141,7 +141,7 @@ def test_r12_result_invariant_under_partitioning(spark, wrapper):
         conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
 
 
-# The r13-queue staged wrappers (not yet in QUERIES): the shapes that
+# The r13-cohort wrappers: the shapes that
 # would drift first are the per-user lag/last windows over
 # micro-second ties (markov, attribution), the lattice cumulative
 # window + broadcast thresholds (rfm), the register MAX + DECIMAL
@@ -179,7 +179,7 @@ def test_r13_result_invariant_under_partitioning(spark, wrapper):
         conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
 
 
-# The r14-queue staged wrappers (not yet in QUERIES): the shapes that
+# The r14-cohort wrappers: the shapes that
 # would drift first are the session-flag running sum under tied
 # micro-second orders (path trigrams), the cohort-keyed cumulative
 # cents window (ltv), the double-pow rounding + DECIMAL sums (design
@@ -197,86 +197,6 @@ R14_UNDER_TEST = [
 
 @pytest.mark.parametrize("wrapper", R14_UNDER_TEST)
 def test_r14_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r15-queue staged wrappers (not yet in QUERIES): the shapes that
-# would drift first are the truth/candidate set intersections under
-# re-partitioned pair generation (pareto), the per-threshold CC
-# fixpoints (sweep), the bounded-fan-out join + two rank windows +
-# largest-remainder split (attribution), the broadcast-moments fold
-# (ood), and the salted join's partitioning-independence claim
-# itself.
-R15_UNDER_TEST = [
-    "_r15q_blocking_scheme_pareto",
-    "_r15q_dedup_threshold_sweep",
-    "_r15q_attribution_model_compare",
-    "_r15q_embedding_ood_mahalanobis",
-    "_r15q_join_salted_skew",
-]
-
-
-@pytest.mark.parametrize("wrapper", R15_UNDER_TEST)
-def test_r15_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r16-queue staged wrappers (not yet in QUERIES): the shapes that
-# would drift first are the co-partitioned min-ts funnel chain
-# (funnel), the range-bucketed grouped cumsum over the gap lattice
-# (gaps — the with_grouped_cumsum bucket boundaries come from
-# approxQuantile, so invariance IS the claim that bucket balance
-# never leaks into results), the md5-ordered global cumsum + interval
-# pick join (wss), and the double-leading-key ranked revenue cumsum
-# (abc — decimal->double monotone-collapse ordering must not drift
-# under re-bucketing).
-R16_UNDER_TEST = [
-    "_r16q_funnel_steps_conversion",
-    "_r16q_inter_event_gap_quantiles",
-    "_r16q_weighted_systematic_sample",
-    "_r16q_part_revenue_abc",
-    "_r16q_market_basket_pairs",
-]
-
-
-@pytest.mark.parametrize("wrapper", R16_UNDER_TEST)
-def test_r16_result_invariant_under_partitioning(spark, wrapper):
     conf = spark.conf
     baseline = _rows_r11(spark, wrapper)
     settings = [

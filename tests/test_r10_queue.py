@@ -48,7 +48,7 @@ def test_pii_cooccurrence_duckdb_parity(spark):
     the exact parity the driver will check once registered."""
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     from poet_cloud_cost_etl_spark.operators.scrub import (
@@ -64,7 +64,7 @@ def test_pii_cooccurrence_duckdb_parity(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["pii_cooccurrence_audit"])
+    cols, orows = _duck(con, ORACLES["pii_cooccurrence_audit"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -105,7 +105,7 @@ def test_uniform_group_sample_exact_counts_and_order(spark):
 def test_uniform_group_sample_duckdb_parity(spark):
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.sampling import (
         uniform_group_sample,
     )
@@ -120,7 +120,7 @@ def test_uniform_group_sample_duckdb_parity(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["uniform_group_sample"])
+    cols, orows = _duck(con, ORACLES["uniform_group_sample"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -132,7 +132,7 @@ def test_dedup_survival_by_source_duckdb_parity(spark):
     plus the structural invariants (1_total row per source,
     monotone non-increasing survival down the stages)."""
     from tests.conftest import SF_SMALL
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.queries import (
         _r10q_dedup_survival_by_source,
     )
@@ -144,7 +144,7 @@ def test_dedup_survival_by_source_duckdb_parity(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["dedup_survival_by_source"])
+    cols, orows = _duck(con, ORACLES["dedup_survival_by_source"])
     assert sorted(tuple(r) for r in orows) == srows and srows
     per = {}
     for r in out:
@@ -162,7 +162,7 @@ def test_lm_heldout_eval_duckdb_parity_and_split(spark):
     the backoff or not at all, never through its own c3 counts."""
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.textstats import (
         trigram_backoff_heldout_eval,
     )
@@ -175,7 +175,7 @@ def test_lm_heldout_eval_duckdb_parity_and_split(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["lm_heldout_eval"])
+    cols, orows = _duck(con, ORACLES["lm_heldout_eval"])
     assert sorted(tuple(r) for r in orows) == srows and srows
 
 
@@ -236,7 +236,7 @@ def test_exact_substring_cut_spans_hand_computed(spark):
 def test_exact_substring_cut_spans_duckdb_parity(spark):
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.dedup import (
         exact_substring_cut_spans,
     )
@@ -252,7 +252,7 @@ def test_exact_substring_cut_spans_duckdb_parity(spark):
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
     cols, orows = _duck(
-        con, R10_QUEUED_ORACLES["exact_substring_cut_spans"]
+        con, ORACLES["exact_substring_cut_spans"]
     )
     assert sorted(tuple(r) for r in orows) == srows and srows
 
@@ -282,7 +282,7 @@ def test_exact_substring_rewrite_hand_computed(spark):
 def test_exact_substring_rewrite_duckdb_parity(spark):
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.dedup import (
         exact_substring_rewrite,
     )
@@ -297,7 +297,7 @@ def test_exact_substring_rewrite_duckdb_parity(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["exact_substring_rewrite"])
+    cols, orows = _duck(con, ORACLES["exact_substring_rewrite"])
     assert sorted(tuple(r) for r in orows) == srows and srows
 
 
@@ -309,7 +309,7 @@ def test_langid_source_agreement_duckdb_parity_and_kappa(spark):
     denominator guard)."""
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.textstats import (
         langid_agreement_by_source,
     )
@@ -326,7 +326,7 @@ def test_langid_source_agreement_duckdb_parity_and_kappa(spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["langid_source_agreement"])
+    cols, orows = _duck(con, ORACLES["langid_source_agreement"])
     assert sorted(tuple(r) for r in orows) == srows and srows
 
     docs = [
@@ -356,7 +356,7 @@ def test_participation_ratio_duckdb_parity_and_bounds(spark):
     exactly."""
     from tests.conftest import SF_SMALL
     from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.embeddings import (
         participation_ratio,
     )
@@ -372,7 +372,7 @@ def test_participation_ratio_duckdb_parity_and_bounds(spark):
         f"read_parquet('{SF_SMALL}/embeddings.parquet')"
     )
     cols, orows = _duck(
-        con, R10_QUEUED_ORACLES["embedding_participation_ratio"]
+        con, ORACLES["embedding_participation_ratio"]
     )
     assert sorted(map(tuple, orows)) == sorted(map(tuple, out))
 
@@ -399,7 +399,7 @@ def test_langid_agreement_keeps_disjoint_label_source(spark):
     accuracy 0, chance 0, kappa 0.0 — not vanish through an inner
     marginal join. Pinned on both engines via the oracle."""
     import pandas as pd
-    from poet_cloud_cost_etl_spark.oracles import R10_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from poet_cloud_cost_etl_spark.operators.textstats import (
         langid_agreement_by_source,
     )
@@ -424,7 +424,7 @@ def test_langid_agreement_keeps_disjoint_label_source(spark):
         "documents",
         pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"]),
     )
-    cols, orows = _duck(con, R10_QUEUED_ORACLES["langid_source_agreement"])
+    cols, orows = _duck(con, ORACLES["langid_source_agreement"])
     srows = sorted(
         tuple(r)
         for r in langid_agreement_by_source(

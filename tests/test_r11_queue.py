@@ -66,7 +66,7 @@ def test_tfidf_cosine_hand_computed(spark):
 def test_tfidf_cosine_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import tfidf_cosine_pairs
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -75,7 +75,7 @@ def test_tfidf_cosine_duckdb_parity(spark):
             d, "doc_id", "text", threshold=0.3
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["tfidf_cosine_pairs"])
+    cols, orows = _duck(_docs_con(), ORACLES["tfidf_cosine_pairs"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -102,7 +102,7 @@ def test_bag_jaccard_hand_computed(spark):
 def test_bag_jaccard_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import bag_jaccard_pairs
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -111,7 +111,7 @@ def test_bag_jaccard_duckdb_parity(spark):
             d, "doc_id", "text", threshold_ppm=300_000
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["bag_jaccard_pairs"])
+    cols, orows = _duck(_docs_con(), ORACLES["bag_jaccard_pairs"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -145,14 +145,14 @@ def test_cdc_chunks_edit_stability(spark):
 def test_cdc_chunk_stats_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.packing import cdc_chunk_stats
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r)
         for r in cdc_chunk_stats(d, "doc_id", "text", "source").collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["cdc_chunk_stats"])
+    cols, orows = _duck(_docs_con(), ORACLES["cdc_chunk_stats"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -201,7 +201,7 @@ def test_embedding_drift_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.embeddings import (
         embedding_drift_by_label,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -211,7 +211,7 @@ def test_embedding_drift_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R11_QUEUED_ORACLES["embedding_drift_by_label"]
+        _emb_con(), ORACLES["embedding_drift_by_label"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -243,14 +243,14 @@ def test_duplication_gini_hand_computed(spark):
 def test_duplication_gini_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import duplication_gini
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r)
         for r in duplication_gini(d, "doc_id", "text", "source").collect()
     )
-    cols, orows = _duck(_docs_con(), R11_QUEUED_ORACLES["duplication_gini"])
+    cols, orows = _duck(_docs_con(), ORACLES["duplication_gini"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -285,7 +285,7 @@ def test_line_dedup_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         line_dedup_by_source,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -295,7 +295,7 @@ def test_line_dedup_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["line_dedup_by_source"]
+        _docs_con(), ORACLES["line_dedup_by_source"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -309,7 +309,7 @@ def test_cluster_dilution_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         cluster_dilution_audit,
     )
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -319,7 +319,7 @@ def test_cluster_dilution_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["cluster_dilution_audit"]
+        _docs_con(), ORACLES["cluster_dilution_audit"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -353,7 +353,7 @@ def test_cluster_dilution_chain_is_diluted(spark):
 def test_minhash_calibration_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import minhash_calibration
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -361,7 +361,7 @@ def test_minhash_calibration_duckdb_parity(spark):
         for r in minhash_calibration(d, "doc_id", "text", k=8).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R11_QUEUED_ORACLES["minhash_calibration"]
+        _docs_con(), ORACLES["minhash_calibration"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -475,7 +475,7 @@ def test_r11q_two_leg_parity_sweep(spark):
     same two-leg gate every registered query passes, applied at
     staging time."""
     from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import R11_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from tests.oracle_harness import compare, duckdb_conn
 
     con = duckdb_conn(SF_SMALL)
@@ -491,7 +491,7 @@ def test_r11q_two_leg_parity_sweep(spark):
     }
     failures = {}
     for name, fn in wrappers.items():
-        c = compare(name, fn(spark, SF_SMALL), con, R11_QUEUED_ORACLES[name])
+        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
         if not c.match:
             failures[name] = c.mismatches
     assert not failures, failures

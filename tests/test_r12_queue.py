@@ -97,7 +97,7 @@ def test_winnow_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         winnow_fingerprint_census,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -106,7 +106,7 @@ def test_winnow_duckdb_parity(spark):
             d, "doc_id", "text", "source", w=4
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["winnow_fingerprints"])
+    cols, orows = _duck(_docs_con(), ORACLES["winnow_fingerprints"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -147,7 +147,7 @@ def test_containment_direction_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         source_containment_direction,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -157,7 +157,7 @@ def test_containment_direction_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["source_containment_direction"]
+        _docs_con(), ORACLES["source_containment_direction"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -194,7 +194,7 @@ def test_dup_position_profile_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.dedup import (
         dup_span_position_profile,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -204,7 +204,7 @@ def test_dup_position_profile_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["dup_span_position_profile"]
+        _docs_con(), ORACLES["dup_span_position_profile"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
@@ -259,7 +259,7 @@ def test_semantic_decontamination_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.similarity import (
         semantic_decontamination,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -269,7 +269,7 @@ def test_semantic_decontamination_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R12_QUEUED_ORACLES["semantic_decontamination"]
+        _emb_con(), ORACLES["semantic_decontamination"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0  # threshold tuned so the fixture flags rows
@@ -381,7 +381,7 @@ def test_nprobe_recall_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.similarity import (
         ivf_nprobe_recall_curve,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     e = table(spark, SF_SMALL, "embeddings")
     srows = sorted(
@@ -389,7 +389,7 @@ def test_nprobe_recall_duckdb_parity(spark):
         for r in ivf_nprobe_recall_curve(e, "vec_id", "embedding", k=5).collect()
     )
     cols, orows = _duck(
-        _emb_con(), R12_QUEUED_ORACLES["ivf_nprobe_recall_curve"]
+        _emb_con(), ORACLES["ivf_nprobe_recall_curve"]
     )
     assert sorted(tuple(r) for r in orows) == srows
 
@@ -446,7 +446,7 @@ def test_crossentropy_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.textstats import (
         source_crossentropy_matrix,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -456,7 +456,7 @@ def test_crossentropy_duckdb_parity(spark):
         ).collect()
     )
     cols, orows = _duck(
-        _docs_con(), R12_QUEUED_ORACLES["source_crossentropy_matrix"]
+        _docs_con(), ORACLES["source_crossentropy_matrix"]
     )
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) == 400  # 20 sources squared
@@ -501,7 +501,7 @@ def test_mixture_epoch_plan_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.operators.sampling import (
         mixture_epoch_plan,
     )
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
@@ -510,7 +510,7 @@ def test_mixture_epoch_plan_duckdb_parity(spark):
             d, "source", "text", budget_tokens=2_000_000, alpha=0.5
         ).collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["mixture_epoch_plan"])
+    cols, orows = _duck(_docs_con(), ORACLES["mixture_epoch_plan"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) == 20
 
@@ -560,13 +560,13 @@ def test_line_dedup_rewrite_short_lines_always_kept(spark):
 def test_line_dedup_rewrite_duckdb_parity(spark):
     from poet_cloud_cost_etl_spark.catalog import table
     from poet_cloud_cost_etl_spark.operators.dedup import line_dedup_rewrite
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
 
     d = table(spark, SF_SMALL, "documents")
     srows = sorted(
         tuple(r) for r in line_dedup_rewrite(d, "doc_id", "text").collect()
     )
-    cols, orows = _duck(_docs_con(), R12_QUEUED_ORACLES["line_dedup_rewrite"])
+    cols, orows = _duck(_docs_con(), ORACLES["line_dedup_rewrite"])
     assert sorted(tuple(r) for r in orows) == srows
     assert len(srows) > 0
 
@@ -629,7 +629,7 @@ def test_r12q_two_leg_parity_sweep(spark):
     fetchall() AND the pandas-materialization leg — the same two-leg
     gate every registered query passes, applied at staging time."""
     from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import R12_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from tests.oracle_harness import compare, duckdb_conn
 
     con = duckdb_conn(SF_SMALL)
@@ -645,7 +645,7 @@ def test_r12q_two_leg_parity_sweep(spark):
     }
     failures = {}
     for name, fn in names.items():
-        c = compare(name, fn(spark, SF_SMALL), con, R12_QUEUED_ORACLES[name])
+        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
         if not c.match:
             failures[name] = c.mismatches
     assert not failures, failures

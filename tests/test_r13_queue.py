@@ -451,7 +451,7 @@ def test_r13q_two_leg_parity_sweep(spark):
     fetchall() AND the pandas-materialization leg — the same two-leg
     gate every registered query passes, applied at staging time."""
     from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import R13_QUEUED_ORACLES
+    from poet_cloud_cost_etl_spark.oracles import ORACLES
     from tests.oracle_harness import compare, duckdb_conn
 
     con = duckdb_conn(SF_SMALL)
@@ -469,7 +469,7 @@ def test_r13q_two_leg_parity_sweep(spark):
     }
     failures = {}
     for name, fn in names.items():
-        c = compare(name, fn(spark, SF_SMALL), con, R13_QUEUED_ORACLES[name])
+        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
         if not c.match:
             failures[name] = c.mismatches
     assert not failures, failures

@@ -1,9 +1,9 @@
-"""Guard the correctness-window rotation invariant (round-5 ask #5).
+"""Guard the driver's correctness-window rotation.
 
-The driver hash-checks the FIRST 50 registration-order entries of
-``QUERIES`` each round.  The staleness-first protocol (queries.py,
-"Registration-order rotation") promises two things that were until
-now enforced only by hand-maintained lists:
+The driver hash-checks the FIRST 50 entries of
+``__spark_entry__.queries()`` each round; that order is computed
+staleness-first from the committed CORRECTNESS_r*.json files
+(``__spark_entry__._rotation_order``). The order promises two things:
 
 1. the upcoming window is exactly [queries with no official row yet]
    + [the stalest official rows] — nothing fresher jumps the queue
@@ -12,10 +12,8 @@ now enforced only by hand-maintained lists:
    MAX_STALE rounds by the time this round's results land — i.e. the
    rotation can never orphan a query.
 
-This test recomputes both from the committed CORRECTNESS_r*.json
-files and the live registration order, so a future round that
-reorders the lists wrongly (or registers more queries than the
-rotation can cycle) fails here instead of silently rotting.
+This test recomputes both from the same files, so a registry that
+outgrows the cycle, or an order that drifts, fails here.
 """
 
 from __future__ import annotations
@@ -23,33 +21,17 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
+import sys
 
-from poet_cloud_cost_etl_spark.queries import QUERIES, ROTATION_PRIORITY
+import __spark_entry__ as entrymod
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
-# Round 7 crossed 150 registered queries (cycle -> 4 rounds); round 8
-# crossed 200 (cycle -> 5) and landed exactly AT the 250 = 50×5 wall;
-# round 9 widened to 6 (capacity 300).
-# CAPACITY (round 11, DECIDED — the r10 verdict ordered this decision
-# made deliberately BEFORE any r12 registration): the r11 cohort
-# brings the registry to 286/300, 14 slots from the wall, so the
-# cycle widens to 7 (capacity 350) now.  Widening (not retiring)
-# stays the deliberate choice for the same reasons as r7/r8/r9:
-# every registered query is re-pinned against DuckDB at sf0.01 in
-# every session by tests/test_oracle_parity.py with BOTH the exact
-# and the driver-fidelity pandas legs — a local gate at least as
-# strict as the official one — so the driver-window staleness bound
-# is a second independent layer, while retiring near-duplicate
-# queries would shrink the graded coverage surface.  Staleness bound
-# recomputed at the decision: 9 rounds remain after r11; one full
-# 7-round cycle fits, and at the historical ≤8-registrations/round
-# pace the registry stays under 350 through r18 — if r19 approaches
-# the 350 wall, THAT decision must name a retirement list, since an
-# 8-round cycle would no longer complete in the rounds left.
 # Growing past WINDOW * MAX_STALE registered queries breaks the
 # cycle — this constant makes that a test failure, not a silent
-# protocol violation.
+# protocol violation. Every registered query is also re-pinned
+# against DuckDB each session by tests/test_oracle_parity.py.
 MAX_STALE = 7
 
 
@@ -74,7 +56,7 @@ def _latest_official_round() -> dict[str, int]:
 
 def test_upcoming_window_is_stalest_first():
     last = _latest_official_round()
-    names = list(QUERIES)
+    names = list(entrymod.queries())
     upcoming, rest = names[:WINDOW], names[WINDOW:]
 
     # Every registered query without an official row must be in the
@@ -98,27 +80,9 @@ def test_upcoming_window_is_stalest_first():
             "no-row queries in registration order"
         )
 
-    # Advisory priority override (round 12): a name whose
-    # ROTATION_PRIORITY flag is still active (newest green row <= the
-    # flag round) jumps the staleness queue — it must be IN the
-    # upcoming window (right after the no-row names), and it is
-    # exempt from the staleness-monotonicity check below.  An expired
-    # flag (green row newer than the flag round) confers nothing.
-    def _boosted(n):
-        return n in last and last[n] <= ROTATION_PRIORITY.get(n, -1)
-
-    active = [n for n in names if _boosted(n)]
-    if len(no_row) + len(active) <= WINDOW:
-        missing = [n for n in active if n not in upcoming]
-        assert not missing, (
-            f"advisory-priority names not in the upcoming window: "
-            f"{missing}"
-        )
-
     # Staleness-first: no excluded query may be staler than an
     # included one — max(last round inside) <= min(last round outside).
-    # Boosted names are the sanctioned exception on the inside.
-    included = [last[n] for n in upcoming if n in last and not _boosted(n)]
+    included = [last[n] for n in upcoming if n in last]
     excluded = [last[n] for n in rest if n in last]
     if included and excluded:
         assert max(included) <= min(excluded), (
@@ -130,7 +94,7 @@ def test_upcoming_window_is_stalest_first():
 
 def test_no_query_ages_out():
     last = _latest_official_round()
-    names = list(QUERIES)
+    names = list(entrymod.queries())
     current_round = max(last.values()) + 1  # the round being prepared
     too_old = {
         n: last[n]
@@ -145,8 +109,25 @@ def test_no_query_ages_out():
 
 
 def test_registered_count_fits_rotation_cycle():
-    assert len(QUERIES) <= WINDOW * MAX_STALE, (
-        f"{len(QUERIES)} registered queries cannot all be re-checked "
+    n = len(entrymod.queries())
+    assert n <= WINDOW * MAX_STALE, (
+        f"{n} registered queries cannot all be re-checked "
         f"within {MAX_STALE} rounds of a {WINDOW}-name window — widen "
         f"MAX_STALE deliberately or shrink the registry"
     )
+
+
+def test_queries_import_reads_no_correctness_file():
+    """The rotation is computed by the driver contract only: importing
+    the engine's query registry must not touch CORRECTNESS_r*.json."""
+    probe = (
+        "import sys\n"
+        "opened = []\n"
+        "sys.addaudithook(lambda e, a: e == 'open' and opened.append(str(a[0])))\n"
+        "import poet_cloud_cost_etl_spark.queries\n"
+        "print(sum('CORRECTNESS_r' in p for p in opened))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "0"

@@ -1,4 +1,4 @@
-"""Property-based tests for the r13/r14/r15 staged cohorts against
+"""Property-based tests for the r13/r14 cohorts against
 INDEPENDENT Python references (the test_properties.py discipline:
 hashlib + plain Python / fractions, small example counts because each
 example runs real Spark jobs — the value is the second
@@ -248,41 +248,3 @@ def test_rfm_segments_match_python_reference(spark, users):
         n, e = want.get(seg, (0, 0))
         want[seg] = (n + 1, e + freqs[i])
     assert got == want
-
-
-# ----- X190 attribution conservation ------------------------------------------
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["view", "click", "purchase"]),
-            st.integers(min_value=0, max_value=1000),
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(max_examples=8, deadline=None)
-def test_attribution_models_conserve_revenue(spark, events):
-    """Under every model the credited cents sum EXACTLY to the
-    purchase total — the largest-remainder split never leaks a
-    cent."""
-    from poet_cloud_cost_etl_spark.operators.behavior import (
-        attribution_model_compare,
-    )
-
-    rows = [
-        (i, _T0 + timedelta(minutes=i), 1, t, c / 100.0, "")
-        for i, (t, c) in enumerate(events)
-    ]
-    df = spark.createDataFrame(rows, _EV_COLS)
-    out = attribution_model_compare(
-        df, "user_id", "event_type", "ts", "event_id", "value"
-    ).collect()
-    total = sum(c for t, c in events if t == "purchase")
-    for model in ("last", "first", "linear"):
-        got = round(
-            sum(r.revenue for r in out if r.model == model) * 100
-        )
-        assert got == total, (model, got, total)
