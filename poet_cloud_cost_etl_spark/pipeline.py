@@ -6,12 +6,22 @@ raw to PG, normalize (pandas), load normalized to PG, then create the
 UNION ALL view. Every stage materializes in driver RAM — the
 documented 16 GB OOM (CLAUDE.md:128-129).
 
-Here each stage stays a lazy DataFrame; the only actions are the
-sink writes. Raw and normalized tables land as parquet (partitioned
-for the costs layout) or JDBC (when a URL is configured); the costs
-view is registered in the session catalog. A sync_log row is appended
-per table (closing the reference's latent gap — init.sql defines the
-table but never writes it).
+Here each stage stays a lazy DataFrame. The Spark jobs of a run are:
+
+- per source: whatever its ``read`` runs (a ``mergeSchema`` scan
+  infers the merged schema in one job; a cached ``catalog.table``
+  schema runs none), the ``isEmpty`` guard, the raw write, and the
+  normalized write — whose row count comes from an ``Observation``
+  on the written frame, not from a re-read;
+- per run: one ``sync_log`` append holding every landed or failed
+  source's row (closing the reference's latent gap — init.sql
+  defines the table but never writes it).
+
+Raw and normalized tables land as parquet (partitioned for the costs
+layout) and, when a URL is configured, the normalized one also via
+JDBC. The costs view is registered in the session catalog over a
+re-read of the committed files, declared with the schema just
+written, so no inference job runs.
 """
 
 from __future__ import annotations
@@ -20,14 +30,15 @@ import time
 from dataclasses import dataclass, field
 from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .config import EngineConfig
-from .operators.normalize import normalize_mapped
+from .operators.normalize import NORMALIZED_COLUMNS, normalize_mapped
 from .operators.union_view import create_costs_view
 from .sources.base import Source
 from .sources.sinks import write_costs_partitioned, write_jdbc, write_parquet_partitioned
-from .sources.sync_log import append_sync_log, log_entry
+from .sources.sync_log import append_sync_log, log_frame
 
 
 @dataclass
@@ -64,7 +75,10 @@ def sync(
 
     ``dry_run`` prints the plan without touching data
     (main.py:41,60-63 parity); failures are isolated per source
-    (main.py:119-122 swallows per-path errors and continues).
+    (main.py:119-122 swallows per-path errors and continues). The
+    run's ``sync_log`` rows are appended once, after the last source;
+    if that append fails, the error is ``report.failures["sync_log"]``
+    and every landed source stays in ``report.tables`` and the view.
 
     ``config`` (config.EngineConfig, reference src/config.py:32-61)
     supplies the output root when ``output_root`` is None and, when
@@ -85,6 +99,7 @@ def sync(
     ts = sync_timestamp or datetime.utcnow()
     report = SyncReport()
     normalized: dict[str, DataFrame] = {}
+    log_rows: list[tuple] = []
 
     start = sync_window_start(ts, months) if months is not None else None
 
@@ -95,8 +110,6 @@ def sync(
             if start is not None:
                 dc = getattr(src, "date_column", lambda: None)()
                 if dc is not None:
-                    from pyspark.sql import functions as F
-
                     raw = raw.filter(F.col(dc) >= F.lit(start))
             if dry_run:
                 print(f"[dry-run] {src.name}: schema={raw.schema.simpleString()}")
@@ -115,23 +128,18 @@ def sync(
                 cloud_provider=src.cloud_provider(),
                 sync_timestamp=ts,
             )
+            # the row count rides on the write itself (no re-read count)
+            obs = Observation()
+            path = f"{output_root}/{src.name}_normalized"
             write_costs_partitioned(
-                norm, f"{output_root}/{src.name}_normalized", if_exists="replace"
+                norm.observe(obs, F.count(F.lit(1)).alias("rows")), path,
+                if_exists="replace",
             )
-            # re-read the sink so the view is backed by the committed data
+            n = obs.get["rows"]
+            # re-read the sink so the view is backed by the committed
+            # data; the declared schema skips the inference job
             normalized[src.name] = (
-                spark.read.parquet(f"{output_root}/{src.name}_normalized")
-                .select(
-                    "date",
-                    "account_id",
-                    "service",
-                    "region",
-                    "cost",
-                    "currency",
-                    "cloud_provider",
-                    "source_table",
-                    "sync_timestamp",
-                )
+                spark.read.schema(norm.schema).parquet(path).select(*NORMALIZED_COLUMNS)
             )
             if config is not None and config.jdbc_url:
                 write_jdbc(
@@ -141,14 +149,11 @@ def sync(
                     if_exists="replace",
                     properties=config.jdbc_properties,
                 )
-            n = normalized[src.name].count()
             report.tables[src.name] = n
-            append_sync_log(
-                log_entry(
-                    spark, ts, src.name, "success", n,
-                    len(normalized[src.name].columns), time.time() - t0,
-                ),
-                f"{output_root}/sync_log",
+            # in SYNC_LOG_SCHEMA order: table, status, records,
+            # columns, error, duration
+            log_rows.append(
+                (src.name, "success", n, len(NORMALIZED_COLUMNS), None, time.time() - t0)
             )
         except Exception as exc:  # per-source isolation (main.py:119-122)
             # a source that failed mid-landing (e.g. the JDBC write
@@ -157,20 +162,17 @@ def sync(
             normalized.pop(src.name, None)
             report.tables.pop(src.name, None)
             report.failures[src.name] = str(exc)[:500]
-            # the failure log is itself a sink write — if the original
-            # failure IS the sink/storage, logging would re-raise and
-            # break the per-source isolation contract
-            try:
-                append_sync_log(
-                    log_entry(
-                        spark, ts, src.name, "failed", 0, 0, time.time() - t0,
-                        error_message=str(exc)[:500],
-                    ),
-                    f"{output_root}/sync_log",
-                )
-            except Exception:
-                pass
+            log_rows.append(
+                (src.name, "failed", 0, 0, str(exc)[:500], time.time() - t0)
+            )
 
+    if log_rows:
+        # one append per run; the log is itself a sink write, so its
+        # failure is reported but leaves every landed source landed
+        try:
+            append_sync_log(log_frame(spark, ts, log_rows), f"{output_root}/sync_log")
+        except Exception as exc:
+            report.failures["sync_log"] = str(exc)[:500]
     if normalized and not dry_run:
         create_costs_view(spark, normalized)
     return report

@@ -25,3 +25,19 @@ def spark(tmp_path_factory):
     )
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn, group: str = "count-jobs") -> tuple[int, object]:
+    """(Spark jobs ``fn()`` ran, its result): ``fn`` runs under its own
+    job group, and the listener bus is drained before the group's job
+    ids are read. Job counts do not depend on host speed, so a test can
+    pin them exactly."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out

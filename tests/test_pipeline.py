@@ -13,7 +13,7 @@ from poet_cloud_cost_etl_spark.pipeline import sync
 from poet_cloud_cost_etl_spark.sources.base import make_source
 from poet_cloud_cost_etl_spark.sources.sync_log import read_sync_log
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, count_jobs
 
 TS = datetime(2026, 1, 1)
 
@@ -132,6 +132,85 @@ def test_failure_after_normalize_stays_out_of_view(spark, tmp_path, monkeypatch)
     }
     assert providers == {"aws"}  # orders (gcp) excluded from the view
     assert real_write is not failing_write
+
+
+def test_warm_sync_job_count(spark, tmp_path):
+    """A warm sync of the two fixture sources runs exactly 7 Spark
+    jobs: per source the isEmpty guard, the raw write and the
+    normalized write (the catalog read reuses its cached schema and
+    the row count rides on the normalized write), plus one sync_log
+    append for the run. A driver round-trip creeping back in fails
+    here whatever the host speed."""
+    out = str(tmp_path / "warm")
+    sync(spark, _sources(spark), out, sync_timestamp=TS)
+    jobs, report = count_jobs(
+        spark, lambda: sync(spark, _sources(spark), out, sync_timestamp=TS), "warm-sync"
+    )
+    assert report.tables == {"events": 1000, "orders": 1500}
+    assert jobs == 7
+
+
+def test_sync_log_rows_one_append_per_run(spark, tmp_path):
+    """One sync_log row per landed or failed source, none for an
+    empty one, written by a single append with the audit schema; each
+    row carries the landed count and the costs rows' sync_timestamp."""
+    import os
+
+    from poet_cloud_cost_etl_spark.sources.sync_log import SYNC_LOG_SCHEMA
+
+    def boom(s):
+        raise RuntimeError("source exploded")
+
+    empty = make_source(
+        "empty",
+        read=lambda s: table(s, SF_SMALL, "orders").limit(0),
+        mapping=dict,
+        provider="gcp",
+    )
+    bad = make_source("bad", read=boom, mapping=dict, provider="aws")
+    out = str(tmp_path / "w")
+    report = sync(spark, _sources(spark) + [empty, bad], out, sync_timestamp=TS)
+    assert report.tables == {"events": 1000, "orders": 1500, "empty": 0}
+    assert set(report.failures) == {"bad"}
+
+    files = [f for f in os.listdir(f"{out}/sync_log") if f.endswith(".parquet")]
+    assert len(files) == 1
+    log = spark.read.parquet(f"{out}/sync_log")
+    assert log.schema == spark.createDataFrame([], "id bigint, " + SYNC_LOG_SCHEMA).schema
+    rows = {r.table_name: r for r in log.collect()}
+    assert set(rows) == {"events", "orders", "bad"}
+    for name in ("events", "orders"):
+        assert rows[name].status == "success"
+        assert rows[name].records_synced == report.tables[name]
+        assert rows[name].columns_count == 9
+    assert rows["bad"].status == "failed"
+    assert "source exploded" in rows["bad"].error_message
+    stamps = {
+        r.sync_timestamp
+        for r in spark.table("costs").select("sync_timestamp").distinct().collect()
+    }
+    assert stamps == {r.sync_timestamp for r in rows.values()}
+
+
+def test_sync_log_failure_keeps_landed_sources(spark, tmp_path, monkeypatch):
+    """A failing sync_log append is reported as the run's failure but
+    leaves every landed source in report.tables and in the view."""
+    import poet_cloud_cost_etl_spark.pipeline as pl
+
+    def failing_append(entry, path):
+        raise RuntimeError("log sink down")
+
+    monkeypatch.setattr(pl, "append_sync_log", failing_append)
+    report = sync(spark, _sources(spark), str(tmp_path / "w"), sync_timestamp=TS)
+    assert report.tables == {"events": 1000, "orders": 1500}
+    assert set(report.failures) == {"sync_log"} and not report.ok
+    by_provider = {
+        r.cloud_provider: r.n
+        for r in spark.sql(
+            "SELECT cloud_provider, count(*) AS n FROM costs GROUP BY 1"
+        ).collect()
+    }
+    assert by_provider == {"aws": 1000, "gcp": 1500}
 
 
 def test_sync_window_start_math():
