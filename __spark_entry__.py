@@ -71,6 +71,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query; omitted keys (non-SQL-expressible
-    ops) get the driver's weaker rows-only check."""
+    """DuckDB oracle SQL per query. Every registered query has one
+    (``test_oracle_parity`` checks that both name the same set)."""
     return dict(_oracles.ORACLES)

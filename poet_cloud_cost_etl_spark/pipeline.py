@@ -166,7 +166,7 @@ def sync(
                 (src.name, "failed", 0, 0, str(exc)[:500], time.time() - t0)
             )
 
-    if log_rows:
+    if log_rows and not dry_run:
         # one append per run; the log is itself a sink write, so its
         # failure is reported but leaves every landed source landed
         try:

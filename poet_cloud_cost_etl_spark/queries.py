@@ -5356,7 +5356,7 @@ def q_pc_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("pii_cooccurrence_audit")
-def _r10q_pii_cooccurrence_audit(
+def q_pii_cooccurrence_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """PII co-occurrence audit (operators/scrub.py:
@@ -5369,7 +5369,7 @@ def _r10q_pii_cooccurrence_audit(
 
 
 @query("uniform_group_sample")
-def _r10q_uniform_group_sample(
+def q_uniform_group_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Exact per-group uniform draw (operators/sampling.py:
@@ -5382,7 +5382,7 @@ def _r10q_uniform_group_sample(
 
 
 @query("dedup_survival_by_source")
-def _r10q_dedup_survival_by_source(
+def q_dedup_survival_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-source dedup survival curves — X20's funnel rolled onto
@@ -5463,7 +5463,7 @@ def _r10q_dedup_survival_by_source(
 
 
 @query("lm_heldout_eval")
-def _r10q_lm_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_lm_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out trigram-LM eval per source (operators/textstats.py:
     trigram_backoff_heldout_eval) — train counts from the 4/5
     unit-hash split, scores over the held 1/5; the self-scoring
@@ -5475,7 +5475,7 @@ def _r10q_lm_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("exact_substring_cut_spans")
-def _r10q_exact_substring_cut_spans(
+def q_exact_substring_cut_spans(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """ExactSubstr cut list (operators/dedup.py:
@@ -5489,7 +5489,7 @@ def _r10q_exact_substring_cut_spans(
 
 
 @query("exact_substring_rewrite")
-def _r10q_exact_substring_rewrite(
+def q_exact_substring_rewrite(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """ExactSubstr rewrite (operators/dedup.py:
@@ -5503,7 +5503,7 @@ def _r10q_exact_substring_rewrite(
 
 
 @query("langid_source_agreement")
-def _r10q_langid_source_agreement(
+def q_langid_source_agreement(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-source lang-label agreement (operators/textstats.py:
@@ -5517,7 +5517,7 @@ def _r10q_langid_source_agreement(
 
 
 @query("embedding_participation_ratio")
-def _r10q_embedding_participation_ratio(
+def q_embedding_participation_ratio(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Effective dimensionality (operators/embeddings.py:
@@ -5530,7 +5530,7 @@ def _r10q_embedding_participation_ratio(
 
 
 @query("tfidf_cosine_pairs")
-def _r11q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X156 all-pairs tf·idf cosine join (operators/dedup.py:
     tfidf_cosine_pairs) — exact-integer weights, DECIMAL norms/dot,
     one final double expression."""
@@ -5543,7 +5543,7 @@ def _r11q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("bag_jaccard_pairs")
-def _r11q_bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X157 weighted (bag) Jaccard join (operators/dedup.py:
     bag_jaccard_pairs) — pure integer multiset similarity."""
     from .operators.dedup import bag_jaccard_pairs
@@ -5555,7 +5555,7 @@ def _r11q_bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("cdc_chunk_stats")
-def _r11q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X158 content-defined chunking census (operators/packing.py:
     cdc_chunk_stats) — edit-stable chunk boundaries, per-source
     duplication panel."""
@@ -5566,7 +5566,7 @@ def _r11q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("embedding_drift_by_label")
-def _r11q_embedding_drift_by_label(
+def q_embedding_drift_by_label(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X159 embedding drift (operators/embeddings.py:
@@ -5579,7 +5579,7 @@ def _r11q_embedding_drift_by_label(
 
 
 @query("duplication_gini")
-def _r11q_duplication_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_duplication_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X160 duplication-concentration Gini (operators/dedup.py:
     duplication_gini) — exact lattice Gini of exact-dup
     multiplicities per source."""
@@ -5590,7 +5590,7 @@ def _r11q_duplication_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("line_dedup_by_source")
-def _r11q_line_dedup_by_source(
+def q_line_dedup_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X161 CCNet line-dedup census (operators/dedup.py:
@@ -5602,7 +5602,7 @@ def _r11q_line_dedup_by_source(
 
 
 @query("cluster_dilution_audit")
-def _r11q_cluster_dilution_audit(
+def q_cluster_dilution_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X162 cluster transitivity audit (operators/dedup.py:
@@ -5615,7 +5615,7 @@ def _r11q_cluster_dilution_audit(
 
 
 @query("minhash_calibration")
-def _r11q_minhash_calibration(
+def q_minhash_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X163 MinHash estimator calibration (operators/dedup.py:
@@ -5628,7 +5628,7 @@ def _r11q_minhash_calibration(
 
 
 @query("winnow_fingerprints")
-def _r12q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X164 winnowing fingerprint census (operators/dedup.py:
     winnow_fingerprint_census) — Schleimer 2003 rightmost-min window
     selection; per-source shared-fingerprint rates."""
@@ -5639,7 +5639,7 @@ def _r12q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("source_containment_direction")
-def _r12q_source_containment_direction(
+def q_source_containment_direction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X165 directed containment census (operators/dedup.py:
@@ -5654,7 +5654,7 @@ def _r12q_source_containment_direction(
 
 
 @query("dup_span_position_profile")
-def _r12q_dup_span_position_profile(
+def q_dup_span_position_profile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X166 duplication-position profile (operators/dedup.py:
@@ -5667,7 +5667,7 @@ def _r12q_dup_span_position_profile(
 
 
 @query("semantic_decontamination")
-def _r12q_semantic_decontamination(
+def q_semantic_decontamination(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X167 semantic decontamination (operators/similarity.py:
@@ -5682,7 +5682,7 @@ def _r12q_semantic_decontamination(
 
 
 @query("ivf_nprobe_recall_curve")
-def _r12q_ivf_nprobe_recall_curve(
+def q_ivf_nprobe_recall_curve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X168 IVF recall-vs-nprobe curve (operators/similarity.py:
@@ -5695,7 +5695,7 @@ def _r12q_ivf_nprobe_recall_curve(
 
 
 @query("source_crossentropy_matrix")
-def _r12q_source_crossentropy_matrix(
+def q_source_crossentropy_matrix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X169 source-pair cross-entropy matrix (operators/textstats.py:
@@ -5708,7 +5708,7 @@ def _r12q_source_crossentropy_matrix(
 
 
 @query("mixture_epoch_plan")
-def _r12q_mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X170 data-constrained mixture plan (operators/sampling.py:
     mixture_epoch_plan) — token allocations, epochs, and the
     4-epoch-cap deficit per source."""
@@ -5721,7 +5721,7 @@ def _r12q_mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("line_dedup_rewrite")
-def _r12q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X171 line-dedup rewrite (operators/dedup.py:
     line_dedup_rewrite) — global first-occurrence line survivorship
     and document rebuild; completes the X161 census -> rewritten
@@ -5733,7 +5733,7 @@ def _r12q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("events_markov_transitions")
-def _r13q_events_markov_transitions(
+def q_events_markov_transitions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X172 event-sequence transition census (operators/behavior.py:
@@ -5746,7 +5746,7 @@ def _r13q_events_markov_transitions(
 
 
 @query("purchase_attribution_last_touch")
-def _r13q_purchase_attribution_last_touch(
+def q_purchase_attribution_last_touch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X173 last-touch revenue attribution (operators/behavior.py:
@@ -5761,7 +5761,7 @@ def _r13q_purchase_attribution_last_touch(
 
 
 @query("events_seasonality_chi2")
-def _r13q_events_seasonality_chi2(
+def q_events_seasonality_chi2(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X174 hour-of-day seasonality panel (operators/behavior.py:
@@ -5774,7 +5774,7 @@ def _r13q_events_seasonality_chi2(
 
 
 @query("events_rfm_segments")
-def _r13q_events_rfm_segments(
+def q_events_rfm_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X179 RFM segmentation (operators/behavior.py: rfm_segments) —
@@ -5786,7 +5786,7 @@ def _r13q_events_rfm_segments(
 
 
 @query("vocab_hll_estimate")
-def _r13q_vocab_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_vocab_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X175 register-level HyperLogLog (operators/textstats.py:
     hll_register_estimate) — the oracle-checkable HLL next to the
     KMV sketch (X62); integer register math, signed error vs exact."""
@@ -5797,7 +5797,7 @@ def _r13q_vocab_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("vocab_chao1_richness")
-def _r13q_vocab_chao1_richness(
+def q_vocab_chao1_richness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X176 nonparametric vocabulary richness (operators/textstats.py:
@@ -5810,7 +5810,7 @@ def _r13q_vocab_chao1_richness(
 
 
 @query("knn_hubness_audit")
-def _r13q_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X177 kNN-graph hubness audit (operators/similarity.py:
     knn_hubness_audit) — k-occurrence skew + reciprocity per label
     over the exact top-k graph."""
@@ -5821,7 +5821,7 @@ def _r13q_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("neardup_paradigm_agreement")
-def _r13q_neardup_paradigm_agreement(
+def q_neardup_paradigm_agreement(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X178 cross-paradigm near-dup agreement census
@@ -5834,7 +5834,7 @@ def _r13q_neardup_paradigm_agreement(
 
 
 @query("session_path_trigrams")
-def _r14q_session_path_trigrams(
+def q_session_path_trigrams(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X180 session-bounded path census (operators/behavior.py:
@@ -5847,7 +5847,7 @@ def _r14q_session_path_trigrams(
 
 
 @query("cohort_ltv_curves")
-def _r14q_cohort_ltv_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cohort_ltv_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X181 cohort LTV curves (operators/behavior.py:
     cohort_ltv_curves) — cumulative cohort revenue, the monetary half
     of retention_cohorts."""
@@ -5858,7 +5858,7 @@ def _r14q_cohort_ltv_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("encoding_artifact_rewrite")
-def _r14q_encoding_artifact_rewrite(
+def q_encoding_artifact_rewrite(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X182 encoding-artifact rewrite (operators/textstats.py:
@@ -5870,7 +5870,7 @@ def _r14q_encoding_artifact_rewrite(
 
 
 @query("mixture_design_effect")
-def _r14q_mixture_design_effect(
+def q_mixture_design_effect(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X185 mixture design effect (operators/sampling.py:
@@ -5883,7 +5883,7 @@ def _r14q_mixture_design_effect(
 
 
 @query("srp_cosine_calibration")
-def _r14q_srp_cosine_calibration(
+def q_srp_cosine_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X183 SRP cosine-sketch calibration (operators/similarity.py:
@@ -5896,7 +5896,7 @@ def _r14q_srp_cosine_calibration(
 
 
 @query("pq_distortion_by_label")
-def _r14q_pq_distortion_by_label(
+def q_pq_distortion_by_label(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X186 PQ distortion audit (operators/embeddings.py:
@@ -5909,7 +5909,7 @@ def _r14q_pq_distortion_by_label(
 
 
 @query("mutual_knn_clusters")
-def _r14q_mutual_knn_clusters(
+def q_mutual_knn_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """X187 mutual-kNN clustering census (operators/similarity.py:
@@ -5922,7 +5922,7 @@ def _r14q_mutual_knn_clusters(
 
 
 @query("source_overlap_hll")
-def _r14q_source_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_source_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X184 HLL register-merge overlap matrix (operators/textstats.py:
     source_overlap_hll) — union/intersection estimates from max-merged
     registers vs exact."""

@@ -378,21 +378,9 @@ def _mutual_knn_ivf_scaled(spark, sf_dir, k_scale):
     )
 
 
-def _r11(wrapper_name):
-    """Probe a cohort wrapper in queries.py by its function name
-    (signature (spark, sf_dir))."""
-
-    def fn(spark, sf_dir, k_scale):
-        from poet_cloud_cost_etl_spark import queries as Q
-
-        return getattr(Q, wrapper_name)(spark, sf_dir)
-
-    return fn
-
-
-def _r10_registered(name):
-    """Probe a registered query by name (k_scale unused — the op has
-    no granularity knob; candidate generation is df-capped)."""
+def _registered(name):
+    """Probe a registered query as registered, by name (k_scale
+    unused: the probe measures the registered configuration)."""
 
     def fn(spark, sf_dir, k_scale):
         from poet_cloud_cost_etl_spark.queries import QUERIES
@@ -428,15 +416,15 @@ SCALED_K = [
     # register (tests/test_r11_queue.py) — the c{i} copy prefixes keep
     # cross-copy terms/shingles/lines disjoint, so candidate
     # generation scales linearly and each probe measures the op, not
-    # copy-clique fiction. Wrappers take (spark, sf_dir).
+    # copy-clique fiction.
     ("semantic_dedup_auto_scaled", _semantic_dedup_auto),
-    ("tfidf_cosine_pairs_r11", _r11("_r11q_tfidf_cosine_pairs")),
-    ("bag_jaccard_pairs_r11", _r11("_r11q_bag_jaccard_pairs")),
-    ("cdc_chunk_stats_r11", _r11("_r11q_cdc_chunk_stats")),
-    ("line_dedup_by_source_r11", _r11("_r11q_line_dedup_by_source")),
-    ("cluster_dilution_audit_r11", _r11("_r11q_cluster_dilution_audit")),
-    ("minhash_calibration_r11", _r11("_r11q_minhash_calibration")),
-    ("dedup_survival_by_source", _r10_registered("dedup_survival_by_source")),
+    ("tfidf_cosine_pairs_r11", _registered("tfidf_cosine_pairs")),
+    ("bag_jaccard_pairs_r11", _registered("bag_jaccard_pairs")),
+    ("cdc_chunk_stats_r11", _registered("cdc_chunk_stats")),
+    ("line_dedup_by_source_r11", _registered("line_dedup_by_source")),
+    ("cluster_dilution_audit_r11", _registered("cluster_dilution_audit")),
+    ("minhash_calibration_r11", _registered("minhash_calibration")),
+    ("dedup_survival_by_source", _registered("dedup_survival_by_source")),
     # round-11b: decade points for the r13-queue operators BEFORE they
     # register (tests/test_r13_queue.py). The user-keyed window
     # families ride the new events scale-up (10x users, constant
@@ -449,15 +437,15 @@ SCALED_K = [
     # n_centroids 8->64 — constant bucket size, the semantic-family
     # knob); the registered bruteforce config is |N|^2 BY DESIGN and
     # is not probed as-registered (the bm25/semantic-k=8 precedent).
-    ("events_markov_transitions_r13", _r11("_r13q_events_markov_transitions")),
+    ("events_markov_transitions_r13", _registered("events_markov_transitions")),
     ("purchase_attribution_r13",
-     _r11("_r13q_purchase_attribution_last_touch")),
-    ("events_seasonality_chi2_r13", _r11("_r13q_events_seasonality_chi2")),
-    ("events_rfm_segments_r13", _r11("_r13q_events_rfm_segments")),
-    ("vocab_hll_estimate_r13", _r11("_r13q_vocab_hll_estimate")),
-    ("vocab_chao1_richness_r13", _r11("_r13q_vocab_chao1_richness")),
+     _registered("purchase_attribution_last_touch")),
+    ("events_seasonality_chi2_r13", _registered("events_seasonality_chi2")),
+    ("events_rfm_segments_r13", _registered("events_rfm_segments")),
+    ("vocab_hll_estimate_r13", _registered("vocab_hll_estimate")),
+    ("vocab_chao1_richness_r13", _registered("vocab_chao1_richness")),
     ("neardup_paradigm_agreement_r13",
-     _r11("_r13q_neardup_paradigm_agreement")),
+     _registered("neardup_paradigm_agreement")),
     ("knn_hubness_ivf_scaled", _hubness_ivf_scaled),
     # round 13: the REGISTERED bruteforce config became probe-able —
     # _knn_edges routes the |N|² ground truth through the
@@ -466,7 +454,7 @@ SCALED_K = [
     # evals (86 s -> ~5 s at sf0.1).  Expected super-linear BY
     # DESIGN (exact N² ground truth); the ivf entry above remains
     # the linear deployment shape.
-    ("knn_hubness_bruteforce_r13", _r11("_r13q_knn_hubness_audit")),
+    ("knn_hubness_bruteforce_r13", _registered("knn_hubness_audit")),
     # round-11b: decade points for the r14-queue operators BEFORE
     # they register. The events/window families ride the events
     # scale-up; encoding_artifact_rewrite is a pure narrow map; the
@@ -478,13 +466,13 @@ SCALED_K = [
     # only in its token scan (registers and |S|^2 cells constant).
     # mutual_knn_clusters probes in its scaled deployment shape
     # (candidates="ivf", n_centroids 8->64) like knn_hubness.
-    ("session_path_trigrams_r14", _r11("_r14q_session_path_trigrams")),
-    ("cohort_ltv_curves_r14", _r11("_r14q_cohort_ltv_curves")),
-    ("encoding_artifact_rewrite_r14", _r11("_r14q_encoding_artifact_rewrite")),
-    ("mixture_design_effect_r14", _r11("_r14q_mixture_design_effect")),
-    ("srp_cosine_calibration_r14", _r11("_r14q_srp_cosine_calibration")),
-    ("pq_distortion_by_label_r14", _r11("_r14q_pq_distortion_by_label")),
-    ("source_overlap_hll_r14", _r11("_r14q_source_overlap_hll")),
+    ("session_path_trigrams_r14", _registered("session_path_trigrams")),
+    ("cohort_ltv_curves_r14", _registered("cohort_ltv_curves")),
+    ("encoding_artifact_rewrite_r14", _registered("encoding_artifact_rewrite")),
+    ("mixture_design_effect_r14", _registered("mixture_design_effect")),
+    ("srp_cosine_calibration_r14", _registered("srp_cosine_calibration")),
+    ("pq_distortion_by_label_r14", _registered("pq_distortion_by_label")),
+    ("source_overlap_hll_r14", _registered("source_overlap_hll")),
     ("mutual_knn_ivf_scaled", _mutual_knn_ivf_scaled),
     # round 12 (VERDICT r11 task 3): the shipping default is now
     # k ∝ N (n_centroids=None -> max(8, ceil(N/64)), assign="auto"),
@@ -507,18 +495,18 @@ SCALED_K = [
     # probing them); crossentropy grows in its token scan (|S|^2
     # cells constant); mixture_epoch_plan is a per-source token
     # aggregate into a |S|-row panel.
-    ("winnow_fingerprints_r12", _r11("_r12q_winnow_fingerprints")),
+    ("winnow_fingerprints_r12", _registered("winnow_fingerprints")),
     ("source_containment_direction_r12",
-     _r11("_r12q_source_containment_direction")),
+     _registered("source_containment_direction")),
     ("dup_span_position_profile_r12",
-     _r11("_r12q_dup_span_position_profile")),
+     _registered("dup_span_position_profile")),
     ("semantic_decontamination_r12",
-     _r11("_r12q_semantic_decontamination")),
-    ("ivf_nprobe_recall_curve_r12", _r11("_r12q_ivf_nprobe_recall_curve")),
+     _registered("semantic_decontamination")),
+    ("ivf_nprobe_recall_curve_r12", _registered("ivf_nprobe_recall_curve")),
     ("source_crossentropy_matrix_r12",
-     _r11("_r12q_source_crossentropy_matrix")),
-    ("mixture_epoch_plan_r12", _r11("_r12q_mixture_epoch_plan")),
-    ("line_dedup_rewrite_r12", _r11("_r12q_line_dedup_rewrite")),
+     _registered("source_crossentropy_matrix")),
+    ("mixture_epoch_plan_r12", _registered("mixture_epoch_plan")),
+    ("line_dedup_rewrite_r12", _registered("line_dedup_rewrite")),
     ("bbit_pair_core_only", _bbit_pair_core_only),
     ("bm25_retrieval_scaled", _bm25_scaled),
 ]

@@ -94,30 +94,3 @@ def test_oracle_views_resolve(con):
     renamed testdata column breaks here, not silently."""
     assert os.path.exists(os.path.join(SF_MEDIUM, "documents.parquet"))
     assert con.sql("SELECT COUNT(*) FROM documents").fetchone()[0] > 0
-
-
-R11_NAMES = [
-    "bag_jaccard_pairs",
-    "cdc_chunk_stats",
-    "cluster_dilution_audit",
-    "duplication_gini",
-    "embedding_drift_by_label",
-    "line_dedup_by_source",
-    "minhash_calibration",
-    "tfidf_cosine_pairs",
-]
-
-
-@pytest.mark.parametrize("name", R11_NAMES)
-def test_r11_queue_oracle_types_are_driver_portable(name, con):
-    """The r11 cohort's oracles meet the same type discipline as the
-    rest — the r8 failure class these shapes were written against."""
-    offenders = [
-        (col, fam)
-        for col, fam in _result_families(con, ORACLES[name])
-        if fam not in ALLOWED_FAMILIES
-    ]
-    assert not offenders, (
-        f"{name}: driver-fragile result type(s) {offenders} — CAST the "
-        "final projection to the proven set"
-    )

@@ -22,6 +22,42 @@ QUERIES_UNDER_TEST = [
     "text_bigram_lm_score",
     "ann_ivf_refined",
     "dataset_fingerprint",  # XOR-digest order-independence is its whole claim
+    # r11 cohort: the float/aggregation shapes that would drift first
+    # are the DECIMAL dot/norm accumulations (tfidf, drift), the
+    # collect_list-ordered chunk hash (cdc), and the lattice window
+    # (gini).
+    "tfidf_cosine_pairs",
+    "cdc_chunk_stats",
+    "embedding_drift_by_label",
+    "duplication_gini",
+    # r12 cohort: the window-function selection (winnow — lead over a
+    # doc-keyed sort), the HUGEINT/DECIMAL ln-product sums
+    # (crossentropy), the global first-occurrence min-struct (line
+    # rewrite), and the sweep-rank recall (nprobe curve).
+    "winnow_fingerprints",
+    "source_crossentropy_matrix",
+    "line_dedup_rewrite",
+    "ivf_nprobe_recall_curve",
+    # r13 cohort: the per-user lag/last windows over micro-second ties
+    # (markov, attribution), the lattice cumulative window + broadcast
+    # thresholds (rfm), the register MAX + DECIMAL harmonic sum (hll),
+    # and the dual-candidate full-outer union with round-6 cosine
+    # membership (paradigm agreement).
+    "events_markov_transitions",
+    "purchase_attribution_last_touch",
+    "events_rfm_segments",
+    "vocab_hll_estimate",
+    "neardup_paradigm_agreement",
+    # r14 cohort: the session-flag running sum under tied micro-second
+    # orders (path trigrams), the cohort-keyed cumulative cents window
+    # (ltv), the double-pow rounding + DECIMAL sums (design effect),
+    # the SRP sign folds + acos rounding (srp calibration), and the
+    # recursive-CC min-label fixpoint over mutual edges (knn clusters).
+    "session_path_trigrams",
+    "cohort_ltv_curves",
+    "mixture_design_effect",
+    "srp_cosine_calibration",
+    "mutual_knn_clusters",
 ]
 
 SF = "/root/testdata/sf0.001"
@@ -55,162 +91,6 @@ def test_result_invariant_under_partitioning(spark, name):
             conf.set("spark.sql.files.maxPartitionBytes", mpb)
             assert _rows(spark, name) == baseline, (
                 f"{name} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r11-cohort wrappers: the float/aggregation shapes that would
-# drift first are the DECIMAL dot/norm accumulations (tfidf, drift),
-# the collect_list-ordered chunk hash (cdc), and the lattice window
-# (gini).
-R11_UNDER_TEST = [
-    "_r11q_tfidf_cosine_pairs",
-    "_r11q_cdc_chunk_stats",
-    "_r11q_embedding_drift_by_label",
-    "_r11q_duplication_gini",
-]
-
-
-def _rows_r11(spark, wrapper):
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    df = getattr(Q, wrapper)(spark, SF)
-    cols = sorted(df.columns)
-    return sorted(tuple(repr(r[c]) for c in cols) for r in df.collect())
-
-
-@pytest.mark.parametrize("wrapper", R11_UNDER_TEST)
-def test_r11_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r12-cohort wrappers: the shapes that
-# would drift first are the window-function selection (winnow — lead
-# over a doc-keyed sort), the HUGEINT/DECIMAL ln-product sums
-# (crossentropy), the global first-occurrence min-struct (line
-# rewrite), and the sweep-rank recall (nprobe curve).
-R12_UNDER_TEST = [
-    "_r12q_winnow_fingerprints",
-    "_r12q_source_crossentropy_matrix",
-    "_r12q_line_dedup_rewrite",
-    "_r12q_ivf_nprobe_recall_curve",
-]
-
-
-@pytest.mark.parametrize("wrapper", R12_UNDER_TEST)
-def test_r12_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r13-cohort wrappers: the shapes that
-# would drift first are the per-user lag/last windows over
-# micro-second ties (markov, attribution), the lattice cumulative
-# window + broadcast thresholds (rfm), the register MAX + DECIMAL
-# harmonic sum (hll), and the dual-candidate full-outer union with
-# round-6 cosine membership (paradigm agreement).
-R13_UNDER_TEST = [
-    "_r13q_events_markov_transitions",
-    "_r13q_purchase_attribution_last_touch",
-    "_r13q_events_rfm_segments",
-    "_r13q_vocab_hll_estimate",
-    "_r13q_neardup_paradigm_agreement",
-]
-
-
-@pytest.mark.parametrize("wrapper", R13_UNDER_TEST)
-def test_r13_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
-                f"maxPartitionBytes={mpb}"
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-# The r14-cohort wrappers: the shapes that
-# would drift first are the session-flag running sum under tied
-# micro-second orders (path trigrams), the cohort-keyed cumulative
-# cents window (ltv), the double-pow rounding + DECIMAL sums (design
-# effect), the SRP sign folds + acos rounding (srp calibration), and
-# the recursive-CC min-label fixpoint over mutual edges (knn
-# clusters).
-R14_UNDER_TEST = [
-    "_r14q_session_path_trigrams",
-    "_r14q_cohort_ltv_curves",
-    "_r14q_mixture_design_effect",
-    "_r14q_srp_cosine_calibration",
-    "_r14q_mutual_knn_clusters",
-]
-
-
-@pytest.mark.parametrize("wrapper", R14_UNDER_TEST)
-def test_r14_result_invariant_under_partitioning(spark, wrapper):
-    conf = spark.conf
-    baseline = _rows_r11(spark, wrapper)
-    settings = [
-        ("2", str(512 * 1024 * 1024)),
-        ("64", str(256 * 1024)),
-    ]
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for sp, mpb in settings:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            assert _rows_r11(spark, wrapper) == baseline, (
-                f"{wrapper} drifted at shuffle_partitions={sp}, "
                 f"maxPartitionBytes={mpb}"
             )
     finally:

@@ -94,9 +94,16 @@ def test_sync_failure_isolation(spark, tmp_path):
 
 
 def test_sync_dry_run(spark, tmp_path, capsys):
+    """A dry run writes nothing, not even the sync_log row of a source
+    whose read fails; the failure is still reported."""
+
+    def boom(s):
+        raise RuntimeError("source exploded")
+
+    bad = make_source("bad", read=boom, mapping=dict, provider="aws")
     out = str(tmp_path / "w3")
-    report = sync(spark, _sources(spark), out, dry_run=True)
-    assert report.ok and report.tables == {}
+    report = sync(spark, _sources(spark) + [bad], out, dry_run=True)
+    assert report.tables == {} and set(report.failures) == {"bad"}
     captured = capsys.readouterr()
     assert "[dry-run] events" in captured.out
     import os

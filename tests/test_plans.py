@@ -78,45 +78,48 @@ def test_whole_stage_codegen_everywhere(spark):
     for name in ["q1_pricing_summary", "costs_by_service_30d", "join_broadcast_dim"]:
         q = QUERIES[name](spark, SF_SMALL)
         assert X.codegen_stage_count(q) >= 1, name
-        assert "BatchEvalPython" not in X.physical_plan(q), name
 
 
-def test_no_python_udf_in_any_query(spark):
-    """Engine policy (SURVEY §2.12): every registered query compiles
-    to JVM-side expressions — no row-at-a-time Python UDFs anywhere."""
-    offenders = []
-    for name, fn in QUERIES.items():
-        plan = X.physical_plan(fn(spark, SF_SMALL))
-        if "BatchEvalPython" in plan or "PythonUDF" in plan:
-            offenders.append(name)
-    assert not offenders, offenders
+_FORBIDDEN_IN_PLAN = ("BatchEvalPython", "PythonUDF", "CartesianProduct")
 
 
-def test_no_driver_collect_in_any_query(spark):
-    """Twin of the no-Python-UDF guard: CONSTRUCTING any registered
-    query must be fully lazy — no .collect()/.toPandas()/.toLocalIterator
-    on the driver while the plan is declared. This pins the opt-in
-    ``cosine_topk(impl='blas')`` path (similarity.py — the documented
-    driver-OOM hazard that collect()s one side of the GEMM)
-    unreachable from every registered query, forever: a future query
-    that routed through it, or any operator that materialized data to
-    build its plan, fails here before it can ship."""
+def test_every_query_plan_hygiene(spark):
+    """One sweep over every registered query, each built once, for the
+    three plan contracts the engine keeps everywhere:
+
+    - construction is lazy: no .collect()/.toPandas()/.toLocalIterator
+      on the driver while the plan is declared. This keeps the opt-in
+      ``cosine_topk(impl='blas')`` path (similarity.py — the documented
+      driver-OOM hazard that collect()s one side of the GEMM)
+      unreachable from every registered query;
+    - no row-at-a-time Python UDF (SURVEY §2.12): every query compiles
+      to JVM-side expressions;
+    - no CartesianProduct: a cross join over corpus-sized inputs must
+      be a keyed join or a broadcast nested loop over a small side.
+
+    Every offender is listed with what it broke, not only the first."""
     from unittest import mock
 
-    from pyspark.sql import DataFrame
+    # the concrete class: PySpark 4's classic DataFrame overrides
+    # collect & co., so patching pyspark.sql.DataFrame catches nothing
+    DataFrame = type(spark.range(0))
 
     def _boom(self, *a, **k):
         raise AssertionError("driver-side materialization during plan construction")
 
-    offenders = []
+    offenders = {}
     with mock.patch.object(DataFrame, "collect", _boom), \
          mock.patch.object(DataFrame, "toPandas", _boom), \
          mock.patch.object(DataFrame, "toLocalIterator", _boom):
         for name, fn in QUERIES.items():
             try:
-                fn(spark, SF_SMALL)
+                plan = X.physical_plan(fn(spark, SF_SMALL))
             except AssertionError:
-                offenders.append(name)
+                offenders[name] = ["driver collect"]
+                continue
+            found = [op for op in _FORBIDDEN_IN_PLAN if op in plan]
+            if found:
+                offenders[name] = found
     assert not offenders, offenders
 
 
@@ -126,7 +129,6 @@ def test_q5_snowflake_broadcasts_dims(spark):
     q = QUERIES["q5_regional_revenue"](spark, SF_SMALL)
     plan = X.physical_plan(q)
     assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert "CartesianProduct" not in plan
 
 
 def test_jaccard_plan_uses_grouped_pair_gen(spark):
@@ -143,12 +145,11 @@ def test_jaccard_plan_uses_grouped_pair_gen(spark):
 
 
 def test_ivf_plan_broadcasts_centroids(spark):
-    """IVF assignment must broadcast the (tiny) centroid table and the
-    candidate join must be keyed on centroid_id — an unkeyed cartesian
-    anywhere breaks the N + Q·nprobe shuffle contract."""
+    """IVF assignment must broadcast the (tiny) centroid table (the
+    registry-wide sweep above rules out an unkeyed cartesian, which
+    would break the N + Q·nprobe shuffle contract)."""
     q = QUERIES["ann_ivf"](spark, SF_SMALL)
     plan = X.physical_plan(q)
-    assert "CartesianProduct" not in plan, plan
     assert "Broadcast" in plan, plan
 
 
@@ -176,22 +177,6 @@ def test_ivf_assignment_is_shuffle_free(spark):
     assert "row_number" not in plan, plan
 
 
-def test_round6_queries_plan_shapes(spark):
-    """Round-6 operators: no cartesian products, no Python UDFs, and
-    the corpus-LM scorer's joins stay keyed (gram/context), never
-    nested-loop."""
-    for name in [
-        "text_bigram_lm_score",
-        "split_balance_tvd",
-        "embedding_norm_outliers",
-        "ann_recall_eval",
-    ]:
-        q = QUERIES[name](spark, SF_SMALL)
-        plan = X.physical_plan(q)
-        assert "CartesianProduct" not in plan, (name, plan)
-        assert "BatchEvalPython" not in plan, (name, plan)
-
-
 def test_scrub_is_single_stage(spark):
     """Cleaning is a scan-stage narrow map: no exchange at all."""
     q = QUERIES["text_scrub_pii"](spark, SF_SMALL)
@@ -203,7 +188,6 @@ def test_q10_broadcasts_nation_and_takeordered(spark):
     plan = X.physical_plan(q)
     assert "BroadcastHashJoin" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_q18_aggregates_before_join(spark):
@@ -258,17 +242,6 @@ def test_two_phase_count_distinct_shape(spark):
     assert any("user_id" in p and "event_type" in p for p in parts), plan
 
 
-def test_round7b_queries_plan_shapes(spark):
-    """X28-X30: no cartesian products, no Python UDFs anywhere; the
-    SemDeDup pair join must be keyed (BroadcastHashJoin or SMJ on
-    centroid_id), never a nested-loop over corpus pairs."""
-    for name in ["semantic_dedup", "source_overlap_matrix", "quality_ablation"]:
-        q = QUERIES[name](spark, SF_SMALL)
-        plan = X.physical_plan(q)
-        assert "CartesianProduct" not in plan, (name, plan)
-        assert "BatchEvalPython" not in plan, (name, plan)
-
-
 def test_source_overlap_single_scan_no_self_join(spark):
     """X29 is ONE corpus scan: the per-shingle group-set table is
     checkpointed (Scan ExistingRDD downstream) and intersection pairs
@@ -312,7 +285,6 @@ def test_round7d_queries_plan_shapes(spark):
     q = QUERIES["embedding_pq_codes"](spark, SF_SMALL)
     plan = X.physical_plan(q)
     assert "BroadcastExchange" in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_hard_negatives_broadcasts_anchors(spark):
@@ -321,7 +293,6 @@ def test_hard_negatives_broadcasts_anchors(spark):
     q = QUERIES["hard_negative_mining"](spark, SF_SMALL)
     plan = X.physical_plan(q)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_mixture_sample_single_corpus_shuffle(spark):
@@ -695,11 +666,10 @@ def test_round8i_queries_plan_shapes(spark):
     assert cal.count("Exchange") <= 2, cal
 
     nd = X.physical_plan(QUERIES["ann_ndcg_eval"](spark, SF_SMALL))
-    assert "CartesianProduct" not in nd, nd
     assert "BroadcastExchange" in nd, nd
 
     kf = X.physical_plan(QUERIES["split_kfold_grouped"](spark, SF_SMALL))
-    assert "Join" not in kf and "CartesianProduct" not in kf, kf
+    assert "Join" not in kf, kf
 
 
 def test_round8i_single_task_window_removals(spark):
@@ -739,7 +709,6 @@ def test_round9_queries_plan_shapes(spark):
     values, not rows)."""
     tb = X.physical_plan(QUERIES["term_burstiness"](spark, SF_SMALL))
     assert "TakeOrderedAndProject" in tb, tb
-    assert "CartesianProduct" not in tb, tb
 
     dm = X.physical_plan(QUERIES["domain_tag_mixture"](spark, SF_SMALL))
     assert "SortMergeJoin" not in dm and "ShuffledHashJoin" not in dm, dm
@@ -764,12 +733,6 @@ def test_round9_queries_plan_shapes(spark):
     # corpus-sized side must never cross one task: the only
     # single-partition exchanges feed the distinct-value windows
     assert qe.count("Exchange SinglePartition") <= 4, qe
-
-    cp = X.physical_plan(QUERIES["contrastive_pairs_plan"](spark, SF_SMALL))
-    assert "CartesianProduct" not in cp, cp
-
-    sb = X.physical_plan(QUERIES["dedup_survivor_bias"](spark, SF_SMALL))
-    assert "CartesianProduct" not in sb, sb
 
 
 def test_round9_gemm_kernel_plan(spark):

@@ -1,10 +1,4 @@
-"""r13-queue operators: implemented and tested in round 11, with
-registration deferred so the round-12 correctness window covers the
-8-name r12 cohort + the staleness backlog (the staging protocol the
-r10/r11/r12 cohorts used).  Each operator gets (a) hand-computed
-semantics and (b) a DuckDB parity check against the EXACT oracle SQL
-round 13 will register — flipping them on is a two-line change with
-parity already proven."""
+"""Hand-computed semantics and invariants of the r13-cohort operators."""
 
 from __future__ import annotations
 
@@ -392,84 +386,3 @@ def test_paradigm_buckets_partition_the_union(spark):
         assert r.paradigm in ("both", "lsh_only", "cosine_only")
         assert r.min_jaccard_ppm <= r.mean_jaccard_ppm <= r.max_jaccard_ppm
         assert r.n_pairs > 0
-
-
-# ----- staging gates (the r10/r11/r12 protocol) -------------------------------
-
-_R13_WRAPPERS = (
-    "_r13q_events_markov_transitions",
-    "_r13q_purchase_attribution_last_touch",
-    "_r13q_events_seasonality_chi2",
-    "_r13q_events_rfm_segments",
-    "_r13q_vocab_hll_estimate",
-    "_r13q_vocab_chao1_richness",
-    "_r13q_knn_hubness_audit",
-    "_r13q_neardup_paradigm_agreement",
-)
-
-
-def test_r13q_wrappers_survive_empty_input(spark, tmp_path):
-    """P9 discipline applied at staging time: every r13-queue wrapper
-    must run against schema-only empty tables."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    out = str(tmp_path / "empty_sf")
-    for t in ("documents", "embeddings", "events"):
-        spark.read.parquet(f"{SF_SMALL}/{t}.parquet").limit(0).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-    failures = {}
-    for name in _R13_WRAPPERS:
-        try:
-            getattr(Q, name)(spark, out).count()
-        except Exception as exc:
-            failures[name] = str(exc).splitlines()[0][:120]
-    assert not failures, failures
-
-
-def test_r13q_plan_guards(spark):
-    """Staging-time plan hygiene: no row-at-a-time Python UDF, no
-    cartesian product over corpus-sized inputs, in any staged
-    wrapper's plan.  (X177's brute-force kNN ground truth compiles
-    to BroadcastNestedLoopJoin over the broadcast query side — the
-    X4 shape — not CartesianProduct.)"""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    for name in _R13_WRAPPERS:
-        plan = (
-            getattr(Q, name)(spark, SF_SMALL)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BatchEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_r13q_two_leg_parity_sweep(spark):
-    """Driver-fidelity sweep over the WHOLE r13 queue: exact
-    fetchall() AND the pandas-materialization leg — the same two-leg
-    gate every registered query passes, applied at staging time."""
-    from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import ORACLES
-    from tests.oracle_harness import compare, duckdb_conn
-
-    con = duckdb_conn(SF_SMALL)
-    names = {
-        "events_markov_transitions": Q._r13q_events_markov_transitions,
-        "purchase_attribution_last_touch": (
-            Q._r13q_purchase_attribution_last_touch
-        ),
-        "events_seasonality_chi2": Q._r13q_events_seasonality_chi2,
-        "events_rfm_segments": Q._r13q_events_rfm_segments,
-        "vocab_hll_estimate": Q._r13q_vocab_hll_estimate,
-        "vocab_chao1_richness": Q._r13q_vocab_chao1_richness,
-        "knn_hubness_audit": Q._r13q_knn_hubness_audit,
-        "neardup_paradigm_agreement": Q._r13q_neardup_paradigm_agreement,
-    }
-    failures = {}
-    for name, fn in names.items():
-        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
-        if not c.match:
-            failures[name] = c.mismatches
-    assert not failures, failures

@@ -1,8 +1,4 @@
-"""r14-queue operators: implemented and tested in round 11, with
-registration deferred per the staging protocol (r12 window = r12
-cohort + staleness backlog; r13 window = r13 cohort + backlog).  Each
-operator gets (a) hand-computed semantics and (b) a DuckDB parity
-check against the EXACT oracle SQL round 14 will register."""
+"""Hand-computed semantics and invariants of the r14-cohort operators."""
 
 from __future__ import annotations
 
@@ -302,80 +298,3 @@ def test_hll_overlap_fixture_error_bounded(spark):
     assert len(rows) == 190  # 20 choose 2
     for r in rows:
         assert abs(r.union_err_ppm) < 400_000, r
-
-
-# ----- staging gates (the r10..r13 protocol) ----------------------------------
-
-_R14_WRAPPERS = (
-    "_r14q_session_path_trigrams",
-    "_r14q_cohort_ltv_curves",
-    "_r14q_encoding_artifact_rewrite",
-    "_r14q_mixture_design_effect",
-    "_r14q_srp_cosine_calibration",
-    "_r14q_pq_distortion_by_label",
-    "_r14q_mutual_knn_clusters",
-    "_r14q_source_overlap_hll",
-)
-
-
-def test_r14q_wrappers_survive_empty_input(spark, tmp_path):
-    """P9 discipline applied at staging time: every r14-queue wrapper
-    must run against schema-only empty tables."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    out = str(tmp_path / "empty_sf")
-    for t in ("documents", "embeddings", "events"):
-        spark.read.parquet(f"{SF_SMALL}/{t}.parquet").limit(0).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/{t}.parquet")
-    failures = {}
-    for name in _R14_WRAPPERS:
-        try:
-            getattr(Q, name)(spark, out).count()
-        except Exception as exc:
-            failures[name] = str(exc).splitlines()[0][:120]
-    assert not failures, failures
-
-
-def test_r14q_plan_guards(spark):
-    """Staging-time plan hygiene: no row-at-a-time Python UDF, no
-    cartesian product over corpus-sized inputs, in any staged
-    wrapper's plan."""
-    from poet_cloud_cost_etl_spark import queries as Q
-
-    for name in _R14_WRAPPERS:
-        plan = (
-            getattr(Q, name)(spark, SF_SMALL)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BatchEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_r14q_two_leg_parity_sweep(spark):
-    """Driver-fidelity sweep over the WHOLE r14 queue: exact
-    fetchall() AND the pandas-materialization leg — the same two-leg
-    gate every registered query passes, applied at staging time."""
-    from poet_cloud_cost_etl_spark import queries as Q
-    from poet_cloud_cost_etl_spark.oracles import ORACLES
-    from tests.oracle_harness import compare, duckdb_conn
-
-    con = duckdb_conn(SF_SMALL)
-    names = {
-        "session_path_trigrams": Q._r14q_session_path_trigrams,
-        "cohort_ltv_curves": Q._r14q_cohort_ltv_curves,
-        "encoding_artifact_rewrite": Q._r14q_encoding_artifact_rewrite,
-        "mixture_design_effect": Q._r14q_mixture_design_effect,
-        "srp_cosine_calibration": Q._r14q_srp_cosine_calibration,
-        "pq_distortion_by_label": Q._r14q_pq_distortion_by_label,
-        "mutual_knn_clusters": Q._r14q_mutual_knn_clusters,
-        "source_overlap_hll": Q._r14q_source_overlap_hll,
-    }
-    failures = {}
-    for name, fn in names.items():
-        c = compare(name, fn(spark, SF_SMALL), con, ORACLES[name])
-        if not c.match:
-            failures[name] = c.mismatches
-    assert not failures, failures

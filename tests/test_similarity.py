@@ -60,8 +60,10 @@ def test_default_impl_never_collects_to_driver(spark, monkeypatch):
     def _boom(self):
         raise AssertionError("driver-side collect() in similarity operator")
 
-    monkeypatch.setattr(DataFrame, "collect", _boom)
     e = table(spark, SF_MEDIUM, "embeddings")
+    # the concrete class: PySpark 4's classic DataFrame overrides
+    # collect, so patching pyspark.sql.DataFrame catches nothing
+    monkeypatch.setattr(type(e), "collect", _boom)
     out = cosine_near_dup_pairs(e, "vec_id", "embedding", 0.4)
     assert out.count() > 0
 
