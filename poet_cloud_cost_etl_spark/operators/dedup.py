@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import spread_small_scan
+from .graph import connected_components
 
 # Canonicalized token array from raw text: lowercase, strip
 # non-alphanumerics, split on whitespace runs.
@@ -236,6 +237,33 @@ def ngram_jaccard_from_docs(
         F.explode("__sh").alias("shingle"),
     )
     return _jaccard_core(sh_n, id_col, threshold, min_df, max_df)
+
+
+def neardup_pairs(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """The near-duplicate edge recipe every X7 cluster query shares:
+    ``(doc_a, doc_b, jaccard)`` for 3-gram Jaccard ≥ 0.5, with
+    ``min_df=2`` (result-identical, see ``ngram_jaccard_pairs``)."""
+    return ngram_jaccard_from_docs(docs, id_col, text_col, threshold=0.5, min_df=2)
+
+
+def neardup_clusters(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    pairs: DataFrame | None = None,
+) -> DataFrame:
+    """X7: near-duplicate clusters ``(id_col, cluster_id)`` — connected
+    components of ``pairs`` (default ``neardup_pairs(docs)``) over every
+    document; ``cluster_id`` is the component's minimum id, so
+    ``id == cluster_id`` marks the canonical survivor.  Callers that
+    read the pairs again pass them in, checkpointed once."""
+    if pairs is None:
+        pairs = neardup_pairs(docs, id_col, text_col)
+    return connected_components(
+        docs.select(id_col), pairs, id_col=id_col, src_col="doc_a", dst_col="doc_b"
+    )
 
 
 def _pair_common(
@@ -2884,7 +2912,6 @@ def cluster_dilution_audit(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    fixed_rounds: int = 4,
 ) -> DataFrame:
     """X162: near-dup cluster TRANSITIVITY audit — connected
     components are a transitive closure over pairwise-similar edges,
@@ -2904,8 +2931,6 @@ def cluster_dilution_audit(
     star edges are linear in members; direct scoring is two id-keyed
     joins against the once-checkpointed shingle-array table — never
     pairwise within clusters."""
-    from .graph import connected_components
-
     arrs = (
         spread_small_scan(df)
         .select(F.col(id_col), tokens(text_col).alias("__t"))
@@ -2921,14 +2946,7 @@ def cluster_dilution_audit(
         F.explode("__sh").alias("shingle"),
     )
     pairs = _jaccard_core(sh_n, id_col, threshold, 2, None)
-    cc = connected_components(
-        df.select(id_col),
-        pairs,
-        id_col=id_col,
-        src_col="doc_a",
-        dst_col="doc_b",
-        fixed_rounds=fixed_rounds,
-    )
+    cc = neardup_clusters(df, id_col, text_col, pairs=pairs)
     csize = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("__n")
     )

@@ -8,31 +8,38 @@ Algorithm: iterative min-label propagation. Every node starts labeled
 with its own id; each round, a node adopts the minimum label among
 itself and its neighbors; at fixpoint every node carries the minimum
 node id of its component (which doubles as a canonical, deterministic
-cluster id — no engine-specific numbering).
+cluster id — no engine-specific numbering).  ``cluster_hops`` runs the
+same fixpoint loop over the same adjacency with a min-plus relaxation.
 
 Scale notes (100 TB):
 
 - One round = one shuffle of the (symmetrized) edge list joined to the
   current labels + a min-aggregate — all hash-partitioned on node id,
   broadcast-free, skew handled by AQE.
-- Rounds needed = graph diameter. Near-dup graphs are dense clumps of
-  duplicates with tiny diameters (pairs produced by threshold filters
-  are near-cliques), so convergence in 2-4 rounds is typical;
-  ``max_iter`` caps adversarial chains. (For worst-case chain graphs
-  the O(log n)-round large-star/small-star variant [Kiveris et al.,
-  "Connected Components in MapReduce and Beyond"] is the upgrade path;
-  min-propagation is chosen here because its per-round cost is lower
-  and dedup graphs are shallow.)
-- ``localCheckpoint`` after every round cuts the lineage chain —
-  without it the plan doubles per iteration and the driver re-optimizes
-  an exponentially growing tree.
-- The convergence probe is a ``count`` of changed labels per round —
-  one cheap action over the (already materialized) label table.
+- Rounds needed = the largest hop distance from a node to its
+  component's minimum id. Every near-dup graph the registry builds
+  needs exactly one (sf0.01: 25 edges; sf0.1: 256 edges over 477
+  endpoints), so the loop ends at its first probe, after two rounds.
+  ``max_iter`` caps adversarial chains, and deep chains are real: 12
+  documents that are sliding 6-word windows form a 3-gram Jaccard 0.6
+  path of radius 11.
+- Measured alternatives, both removed (4 cores, ``local[4]``, sf0.1):
+  a fixed budget of 4 lazy rounds plus a confirming round ran 5 rounds
+  where the probe loop runs 2 (e.g. ``dedup_clusters`` 3.07 → 2.71 s,
+  30 → 18 jobs without it) and raised on the chain above; the
+  O(log n)-round large-star/small-star alternation [Kiveris et al.,
+  "Connected Components in MapReduce and Beyond"] lost on the two
+  deepest registry graphs, ``mutual_knn_clusters`` (9 rounds: 4.41 vs
+  3.65 s, 78 vs 68 jobs) and ``dedup_lsh_clusters_star`` (5 rounds:
+  3.03 vs 2.58 s, 46 vs 29 jobs).
+- Rounds chain through lazy ``localCheckpoint``s, which cut the
+  lineage — without them the plan doubles per iteration and the driver
+  re-optimizes an exponentially growing tree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,86 +50,53 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 20,
-    algo: str = "minlabel",
-    fixed_rounds: int | None = None,
 ) -> DataFrame:
     """Return ``(id_col, cluster_id)`` where ``cluster_id`` is the
     minimum node id reachable from each node (singletons cluster with
     themselves). ``nodes`` must contain every id that may appear in
     ``edges``; ``edges`` may be directed — it is symmetrized here.
+    Raises instead of returning labels when ``max_iter`` rounds do not
+    confirm the fixpoint (unconverged labels split components)."""
+    adj = _adjacency(nodes, edges, id_col, src_col, dst_col)
+    return _min_labels(adj, max_iter).select(
+        F.col("node").alias(id_col), F.col("v").alias("cluster_id")
+    )
 
-    ``algo="minlabel"`` (default): diameter-round min propagation —
-    lowest per-round cost, right for the shallow near-clique graphs
-    dedup thresholds produce. ``algo="star"``: the O(log n)-round
-    large-star/small-star alternation — right for graphs that may
-    contain long chains (e.g. transitive similarity at low
-    thresholds).  Both return identical labels (pinned by
-    tests/test_graph.py).
 
-    ``fixed_rounds`` (minlabel only): when the diameter bound is known
-    a priori (threshold near-dup graphs are near-cliques, diameter
-    ≤ ~4), run exactly that many propagation rounds with LAZY
-    checkpoints — one Spark job materializes the whole chain instead
-    of a driver-synced job + probe per round — then ONE confirming
-    round verifies the fixpoint. Too small a bound still NEVER
-    returns wrong labels: the confirmation raises instead."""
-    if algo == "star":
-        if fixed_rounds is not None:
-            raise ValueError(
-                "fixed_rounds is a minlabel-only optimization; "
-                "algo='star' schedules its own rounds"
-            )
-        return _connected_components_star(
-            nodes, edges, id_col, src_col, dst_col, max_iter
-        )
-    if algo != "minlabel":
-        raise ValueError(f"unknown algo {algo!r} (want 'minlabel' or 'star')")
-    # r14 job-count surgery (guide §2.4/§5). Three structural moves,
-    # all label-identical:
-    #
-    # 1. SELF-LOOP propagation: the adjacency carries one (v, v,
-    #    is_self=true) row per node, so a round is join → aggregate
-    #    with the label table referenced EXACTLY ONCE (the former
-    #    labs.union(neighbor_labs) referenced it twice — one more
-    #    exchange per round, and any un-materialized labs fed two
-    #    concurrent map stages that each recomputed its whole chain).
-    #    min over {lab(v)} ∪ {lab(u): u~v} is unchanged; shuffle
-    #    volume per round (|V| + 2|E| rows into the aggregate) is
-    #    unchanged.
-    # 2. The PREVIOUS label rides the same aggregate (min of the
-    #    self-row's lab — exactly one self row per node), so the
-    #    fixpoint probe is a scan-filter over the round's own
-    #    materialized output: the former separate confirm-join job is
-    #    gone.
-    # 3. Rounds chain through LAZY checkpoints (lineage cut, RDD
-    #    persisted, each round referenced once by the next) and only
-    #    the probe round is EAGER — fixed_rounds runs as ONE
-    #    driver-synced job + one scan-count, instead of five jobs.
-    #    The adjacency stays EAGER: its map stages are independent of
-    #    the round chain, so a lazy adjacency would be recomputed by
-    #    every round's concurrently-submitted join stage — measured
-    #    2× slower on the CC-heavy bench subset, not a win.
-    # Single-reference symmetrization (r14): both orientations explode
-    # out of ONE pass over the edge list — the former union of two
-    # selects referenced the (typically expensive) upstream pair chain
-    # twice, and two union branches are two concurrently-submitted map
-    # stages that each re-execute everything after the pair core's
-    # internal checkpoint.
-    sym = (
+def _symmetrize(
+    edges: DataFrame, src_col: str, dst_col: str, a: str, b: str
+) -> DataFrame:
+    """Distinct ``(a, b)`` rows holding both orientations of every edge.
+    Single-reference (r14): both orientations explode out of ONE pass
+    over the edge list — a union of two selects referenced the
+    (typically expensive) upstream pair chain twice, as two
+    concurrently-submitted map stages that each re-executed everything
+    after the pair core's internal checkpoint."""
+    return (
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-                    ),
+                    F.struct(F.col(src_col).alias(a), F.col(dst_col).alias(b)),
+                    F.struct(F.col(dst_col).alias(a), F.col(src_col).alias(b)),
                 )
             ).alias("__e")
         )
-        .select("__e.a", "__e.b")
+        .select(f"__e.{a}", f"__e.{b}")
         .distinct()
+    )
+
+
+def _adjacency(
+    nodes: DataFrame, edges: DataFrame, id_col: str, src_col: str, dst_col: str
+) -> DataFrame:
+    """``(a, b, is_self)``: the symmetrized edges plus one ``(v, v,
+    true)`` SELF row per node, so a round is join → aggregate with the
+    value table referenced exactly once (r14).  EAGER checkpoint: its
+    map stages are independent of the round chain, so a lazy adjacency
+    would be recomputed by every round's concurrently-submitted join
+    stage — measured 2× slower on the CC-heavy bench subset."""
+    return (
+        _symmetrize(edges, src_col, dst_col, "a", "b")
         .select("a", "b", F.lit(False).alias("is_self"))
         .unionByName(
             nodes.select(
@@ -133,200 +107,71 @@ def connected_components(
         )
         .localCheckpoint(eager=True)
     )
-    # Initial labels come from the MATERIALIZED self rows, not from
-    # ``nodes`` directly — the node frame may itself be an expensive
-    # pipeline (e.g. a kNN-derived vertex set), and referencing it here
-    # would execute it a second time (r14: measured 1.6× on
-    # mutual_knn_clusters, whose nodes are the gemm top-k vertex set).
-    labels = sym.filter(F.col("is_self")).select(
-        F.col("a").alias("node"), F.col("a").alias("lab")
+
+
+def _min_labels(adj: DataFrame, max_iter: int) -> DataFrame:
+    """``(node, v)``: min-label propagation to the fixpoint.  Initial
+    labels come from the MATERIALIZED self rows, not from ``nodes`` —
+    the node frame may itself be an expensive pipeline (r14: measured
+    1.6× on mutual_knn_clusters, whose nodes are the gemm top-k vertex
+    set)."""
+    seeds = adj.filter(F.col("is_self")).select(
+        F.col("a").alias("node"), F.col("a").alias("v")
     )
+    return _fixpoint(adj, seeds, F.col("v"), max_iter, "connected_components")
 
-    def _propagate(labs: DataFrame, with_prev: bool = False) -> DataFrame:
-        joined = sym.join(labs, sym["b"] == labs["node"])
-        aggs = [F.min("lab").alias("lab")]
+
+def _fixpoint(
+    adj: DataFrame, values: DataFrame, relax: Column, max_iter: int, what: str
+) -> DataFrame:
+    """Relax ``values`` ``(node, v)`` over ``adj`` until nothing
+    changes: each round, v(n) := min of ``relax`` over the rows
+    ``(n, m, is_self)``, where ``relax`` reads the neighbor's ``v`` and
+    ``is_self``.  Returns the fixpoint ``(node, v)``; raises after
+    ``max_iter`` rounds without one.
+
+    Two rounds per probe: ``relax`` must never increase a value, so the
+    probe (round 2k vs 2k−1) detects exactly the fixpoint a per-round
+    probe finds, at half the driver syncs.  The previous value rides the
+    same aggregate (the self row's term — exactly one self row per
+    node), so the probe is a scan-filter over the round's own output."""
+
+    def _round(cur: DataFrame, with_prev: bool = False) -> DataFrame:
+        joined = adj.join(cur, adj["b"] == cur["node"]).select(
+            F.col("a").alias("__n"), relax.alias("v"), "is_self"
+        )
+        aggs = [F.min("v").alias("v")]
         if with_prev:
-            aggs.append(
-                F.min(F.when(F.col("is_self"), F.col("lab"))).alias("__prev")
-            )
-        return (
-            joined.select(F.col("a").alias("__n"), "lab", "is_self")
-            .groupBy("__n")
-            .agg(*aggs)
-            .withColumnRenamed("__n", "node")
-        )
+            aggs.append(F.min(F.when(F.col("is_self"), F.col("v"))).alias("__prev"))
+        return joined.groupBy("__n").agg(*aggs).withColumnRenamed("__n", "node")
 
-    def _probe_round(labs: DataFrame) -> DataFrame:
-        """One propagation with the previous label folded into the
-        same aggregate.  LAZY checkpoint (r15): the `_changed` count
-        that immediately follows is the materializing action — the
-        lazy-checkpointed RDD persists during that count and Spark's
-        doCheckpoint backfills any partitions the limit(1) short-
-        circuit skipped, so the former separate eager-checkpoint job
-        is folded into the probe count: ONE driver sync per probe
-        instead of two.  (Unlike the adjacency, `both` has no
-        concurrent consumers — the count runs strictly before the
-        next reference — so the r14 lazy-recompute race cannot
-        occur.)"""
-        return _propagate(labs, with_prev=True).localCheckpoint(eager=False)
-
-    def _changed(both: DataFrame) -> int:
-        # NULL-safe (r15, ADVICE r14): an edge endpoint missing from
-        # ``nodes`` has no self row, so its __prev is NULL — under the
-        # old `lab != __prev` the row silently dropped out and a round
-        # where only such nodes changed read as converged (wrong split
-        # components returned instead of a loud error).  The docstring
-        # contract (nodes ⊇ edge endpoints) makes __prev non-NULL for
-        # every compliant caller; a violation now keeps probing (and
-        # fails the fixed_rounds confirm) instead of lying.
-        # Full-scan count, NOT limit(1): the probe frame is a LAZY
-        # checkpoint and this count is its materializing action — a
-        # limit runs CollectLimit's incremental partition rounds (1,
-        # then 4×, ...), each a separate driver-synced job, and then
-        # doCheckpoint backfills whatever the early-out skipped
-        # (measured r15: the limit form was ~0.5-1 s SLOWER per CC
-        # query than this single-pass count).
-        return both.filter(
-            (F.col("lab") != F.col("__prev")) | F.col("__prev").isNull()
-        ).count()
-
-    if fixed_rounds is not None:
-        # fixed_rounds lazy rounds + the eager probe round = one
-        # materializing job; the confirm is the probe round itself.
-        for _ in range(fixed_rounds):
-            labels = _propagate(labels).localCheckpoint(eager=False)
-        both = _probe_round(labels)
-        if _changed(both) != 0:
-            raise RuntimeError(
-                f"connected_components(fixed_rounds={fixed_rounds}) had not "
-                "reached the fixpoint — the graph's diameter exceeds the "
-                "assumed bound; raise fixed_rounds or use the probe path"
-            )
-        return both.select(
-            F.col("node").alias(id_col), F.col("lab").alias("cluster_id")
-        )
-
-    converged = False
     it = 0
     while it < max_iter:
-        # Two propagation rounds per materialization+probe: labels are
-        # MONOTONE non-increasing under propagation, so the chunk
-        # probe (round 2k vs 2k−1) detects exactly the fixpoint the
-        # per-round probe found, at half the driver-job count.
         step = min(2, max_iter - it)
         for _ in range(step - 1):
-            labels = _propagate(labels).localCheckpoint(eager=False)
-        both = _probe_round(labels)
+            values = _round(values).localCheckpoint(eager=False)
+        # LAZY probe checkpoint (r15): the count below is its
+        # materializing action, so the probe costs ONE driver sync.
+        # The frame has no other consumer before the count, so the
+        # lazy-recompute race the eager adjacency avoids cannot occur.
+        both = _round(values, with_prev=True).localCheckpoint(eager=False)
         it += step
-        if _changed(both) == 0:
-            converged = True
-            labels = both
-            break
-        labels = both.select("node", "lab")
-    if not converged:
-        # unconverged labels are WRONG (a component would be reported
-        # as several clusters) — never return them silently
-        raise RuntimeError(
-            f"connected_components did not confirm convergence in {max_iter} "
-            "rounds — set max_iter > graph diameter (diameter rounds reach "
-            "the fixpoint; one more confirms it)"
-        )
-    return labels.select(F.col("node").alias(id_col), F.col("lab").alias("cluster_id"))
-
-
-def _connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", public paper). Converges in
-    O(log n) rounds even on chain graphs, vs diameter rounds for min
-    propagation.
-
-    Each half-round is a single hash shuffle: the neighborhood minimum
-    is a window ``min`` partitioned by the star center (no join), and
-    the emitted edges stay oriented big→small so small-star can group
-    without re-symmetrizing.
-
-    - large-star(u): m = min(N(u) ∪ {u}); for each neighbor v > u emit
-      (v, m) — hooks big neighbors onto u's best-known root.
-    - small-star(u) over big→small edges: m = min(N⁻(u)); emit (u, m)
-      and (v, m) for the other small neighbors — flattens partial
-      paths into stars.
-
-    Fixpoint = edge set unchanged after a full round (checked with an
-    ``exceptAll ... limit 1`` probe, cheap on the already-checkpointed
-    sets); at fixpoint the edges form stars rooted at component minima.
-    """
-    # canonical undirected pair set, oriented big→small
-    pairs = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    converged = pairs.limit(1).count() == 0  # no edges: all singletons
-    for _ in range(max_iter):
-        if converged:
-            break
-        # -- large-star: group the symmetrized adjacency by u --------
-        adj = pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        w = Window.partitionBy("u")
-        with_min = adj.select(
-            "u", "v", F.least(F.col("u"), F.min("v").over(w)).alias("m")
-        )
-        large = (
-            with_min.filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star: edges already oriented u > v ----------------
-        w2 = Window.partitionBy("u")
-        with_min2 = large.select("u", "v", F.min("v").over(w2).alias("m"))
-        small = (
-            with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(with_min2.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # Convergence probe: edge-set fixpoint of the COMPOSED round
-        # (large-star then small-star), not a per-half-step check as in
-        # the Kiveris et al. formulation. Sufficiency rests on the
-        # paper's potential-function argument (each composed round is
-        # monotone non-increasing in the potential, and a composed
-        # fixpoint is star-shaped); equivalence to minlabel is pinned
-        # by tests/test_graph.py on fixtures, chains, and the real
-        # near-dup pair graph.
-        changed = (
-            small.exceptAll(pairs).limit(1).count()
-            + pairs.exceptAll(small).limit(1).count()
-        )
-        pairs = small
-        converged = changed == 0
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(algo='star') did not converge in {max_iter} "
-            "rounds — raise max_iter (O(log n) rounds suffice)"
-        )
-    # stars: u → root v. Root of a center is itself; singletons absent.
-    labels = pairs.select(F.col("u").alias("node"), F.col("v").alias("lab"))
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(labels, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("lab", "node").alias("cluster_id"),
-        )
+        values = both.select("node", "v")
+        # NULL-safe (r15): an edge endpoint missing from ``nodes`` has
+        # no self row, so its __prev is NULL; it keeps reading as
+        # changed until max_iter raises, instead of a round where only
+        # such nodes changed reading as converged.  Full-scan count,
+        # not limit(1): a limit runs CollectLimit's incremental
+        # partition rounds as separate jobs and then backfills the
+        # checkpoint (measured r15: ~0.5-1 s slower per CC query).
+        if both.filter(
+            (F.col("v") != F.col("__prev")) | F.col("__prev").isNull()
+        ).count() == 0:
+            return values
+    raise RuntimeError(
+        f"{what} did not confirm convergence in {max_iter} rounds — set "
+        "max_iter > graph diameter (diameter rounds reach the fixpoint; "
+        "one more confirms it)"
     )
 
 
@@ -365,25 +210,7 @@ def pagerank_ppm(
     8 iterations cost 8 pair-generations instead of 1.
     localCheckpoint per round caps the score lineage exactly like
     CC."""
-    # Single-reference symmetrization (r14; see connected_components).
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("src"),
-                        F.col(dst_col).alias("dst"),
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("src"),
-                        F.col(src_col).alias("dst"),
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.src", "__e.dst")
-        .distinct()
-    )
+    sym = _symmetrize(edges, src_col, dst_col, "src", "dst")
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     # r14: the 8 per-iteration checkpoints are LAZY (lineage cut, RDD
     # persisted, each iteration referenced once by the next) so the
@@ -504,105 +331,25 @@ def cluster_hops(
     localCheckpoint lineage cuts — same per-round shape and cost as
     one CC round.  Convergence is confirmed (a round that changes
     nothing), never assumed."""
-    labels = connected_components(
-        nodes, edges, id_col=id_col, src_col=src_col, dst_col=dst_col,
-        max_iter=max_iter,
-    )
-    # r14: the same self-loop/lazy-round/folded-probe surgery as the
-    # minlabel CC (see connected_components) — a relax round is join →
-    # aggregate with the distance table referenced ONCE (the self row
-    # contributes d + 0, a neighbor d + 1), the previous distance
-    # rides the same aggregate, rounds chain lazily in chunks of 2
-    # with one eager probe round each.  Exact by monotonicity:
-    # min-plus relaxation never increases a distance, so the chunk
-    # probe detects exactly the fixpoint the per-round probe found.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.a", "__e.b")
-        .distinct()
-        .select("a", "b", F.lit(False).alias("is_self"))
-        .unionByName(
-            nodes.select(
-                F.col(id_col).alias("a"),
-                F.col(id_col).alias("b"),
-                F.lit(True).alias("is_self"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    INF = 1_000_000_000
+    adj = _adjacency(nodes, edges, id_col, src_col, dst_col)
+    labels = _min_labels(adj, max_iter).withColumnRenamed("v", "cluster_id")
     dist = labels.select(
-        F.col(id_col).alias("node"),
-        F.when(F.col(id_col) == F.col("cluster_id"), F.lit(0))
-        .otherwise(F.lit(INF))
+        "node",
+        F.when(F.col("node") == F.col("cluster_id"), F.lit(0))
+        .otherwise(F.lit(1_000_000_000))
         .cast("long")
-        .alias("d"),
+        .alias("v"),
     )
-
-    def _relax(dd: DataFrame, with_prev: bool = False) -> DataFrame:
-        joined = sym.join(dd, sym["b"] == dd["node"]).select(
-            F.col("a").alias("__n"),
-            (
-                F.col("d")
-                + F.when(F.col("is_self"), F.lit(0)).otherwise(F.lit(1))
-            ).alias("d"),
-            "is_self",
-        )
-        aggs = [F.min("d").alias("d")]
-        if with_prev:
-            aggs.append(
-                F.min(
-                    F.when(F.col("is_self"), F.col("d"))
-                ).alias("__prev")
-            )
-        return joined.groupBy("__n").agg(*aggs).withColumnRenamed("__n", "node")
-
-    converged = False
-    it = 0
-    while it < max_iter:
-        step = min(2, max_iter - it)
-        for _ in range(step - 1):
-            dist = _relax(dist).localCheckpoint(eager=False)
-        # LAZY probe checkpoint (r15) — materialized by the change
-        # count below; same fold as connected_components._probe_round.
-        both = _relax(dist, with_prev=True).localCheckpoint(eager=False)
-        it += step
-        # NULL-safe change probe (r15, ADVICE r14 — same contract
-        # guard as connected_components._changed): a node without a
-        # self row has NULL __prev and would otherwise hide its change
-        # from the probe while ALSO losing its d+0 relax term.
-        # Full-scan count (see connected_components._changed): one
-        # materializing job for the lazy probe, no incremental-limit
-        # job rounds.
-        if (
-            both.filter(
-                (F.col("d") != F.col("__prev")) | F.col("__prev").isNull()
-            ).count()
-            == 0
-        ):
-            dist = both.select("node", "d")
-            converged = True
-            break
-        dist = both.select("node", "d")
-    if not converged:
-        raise RuntimeError(
-            f"cluster_hops did not stabilize in {max_iter} rounds — "
-            "raise max_iter above the graph diameter"
-        )
-    return (
-        labels.join(dist, labels[id_col] == dist["node"])
-        .select(F.col(id_col), F.col("cluster_id"), F.col("d").alias("hops"))
+    # a self row contributes d + 0, a neighbor d + 1
+    hops = _fixpoint(
+        adj,
+        dist,
+        F.col("v") + F.when(F.col("is_self"), F.lit(0)).otherwise(F.lit(1)),
+        max_iter,
+        "cluster_hops",
+    )
+    return labels.join(hops, "node").select(
+        F.col("node").alias(id_col), "cluster_id", F.col("v").alias("hops")
     )
 
 

@@ -817,10 +817,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair aggregation. Hot shingle buckets above split_threshold take
     the AQE-splittable self-join branch instead (operators/dedup.py
     _jaccard_core) — zero rows on this corpus."""
-    from .operators.dedup import ngram_jaccard_from_docs
+    from .operators.dedup import neardup_pairs
 
-    d = table(spark, sf_dir, "documents")
-    return ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5, min_df=2)
+    return neardup_pairs(table(spark, sf_dir, "documents"))
 
 
 @query("dedup_simhash")
@@ -1602,23 +1601,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative min-label connected components (operators/graph.py).
     cluster_id = min doc_id of the component (engine-independent);
     ``keep`` marks the canonical doc — filtering on it IS the dedup."""
-    from .operators.dedup import ngram_jaccard_from_docs
-    from .operators.graph import connected_components
+    from .operators.dedup import neardup_clusters
 
-    d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5, min_df=2)
-    # threshold-0.5 near-dup graphs are near-cliques (diameter ≤ ~4):
-    # fixed_rounds runs 4 lazily-checkpointed rounds in ONE job + one
-    # confirming round, instead of a driver-synced probe per round —
-    # and raises (never returns wrong labels) if the bound is beaten.
-    cc = connected_components(
-        d.select("doc_id"),
-        pairs,
-        id_col="doc_id",
-        src_col="doc_a",
-        dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    cc = neardup_clusters(table(spark, sf_dir, "documents"))
     return cc.select(
         "doc_id",
         "cluster_id",
@@ -3704,8 +3689,7 @@ def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-keyed window."""
     from pyspark import StorageLevel
 
-    from .operators.dedup import fingerprint, ngram_jaccard_from_docs
-    from .operators.graph import connected_components
+    from .operators.dedup import fingerprint, neardup_clusters
     from .operators.sampling import mixture_budget_sample
     from .operators.textstats import quality_features
 
@@ -3729,15 +3713,7 @@ def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BENCH_SF1_r08.json); an eager localCheckpoint lost to recompute
     # because it adds a blocking materialization round-trip.
     base = kept.join(exact_surv, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = ngram_jaccard_from_docs(base, "doc_id", "text", threshold=0.5, min_df=2)
-    cc = connected_components(
-        base.select("doc_id"),
-        pairs,
-        id_col="doc_id",
-        src_col="doc_a",
-        dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    cc = neardup_clusters(base)
     surv = base.join(
         cc.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id"),
         "doc_id",
@@ -4169,11 +4145,10 @@ def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py: pagerank_ppm) — 8 damped rounds of exact
     integer arithmetic; the template/hub ranking of the duplication
     structure."""
-    from .operators.dedup import ngram_jaccard_from_docs
+    from .operators.dedup import neardup_pairs
     from .operators.graph import pagerank_ppm
 
-    d = table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_from_docs(d, "doc_id", "text", 0.5)
+    edges = neardup_pairs(table(spark, sf_dir, "documents"))
     return pagerank_ppm(edges).orderBy("node")
 
 
@@ -4184,17 +4159,10 @@ def q_license_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic license tags by doc_id % 4 (cc-by, mit, apache-2.0,
     proprietary), cluster survivors inherit the strictest member
     tag; `escalated` marks docs whose own tag was weaker."""
-    from .operators.dedup import license_propagation, ngram_jaccard_from_docs
-    from .operators.graph import connected_components
+    from .operators.dedup import license_propagation, neardup_clusters
 
     d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_from_docs(d, "doc_id", "text", threshold=0.5,
-                                    min_df=2)
-    cc = connected_components(
-        d.select("doc_id"), pairs,
-        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    cc = neardup_clusters(d)
     lic = d.select(
         "doc_id",
         F.expr(
@@ -4262,20 +4230,17 @@ def q_dedup_cluster_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_density_audit) — edge density of every multi-member X7
     cluster; sparse clusters flag chain merges (the threshold+CC
     over-merge failure)."""
-    from .operators.dedup import cluster_density_audit, ngram_jaccard_from_docs
-    from .operators.graph import connected_components
+    from .operators.dedup import (
+        cluster_density_audit,
+        neardup_clusters,
+        neardup_pairs,
+    )
 
     d = table(spark, sf_dir, "documents")
     # Bounded pair set shared by CC and the density scorer —
     # materialized once.
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    ).localCheckpoint(eager=True)
-    cc = connected_components(
-        d.select("doc_id"), pairs,
-        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    pairs = neardup_pairs(d).localCheckpoint(eager=True)
+    cc = neardup_clusters(d, pairs=pairs)
     return cluster_density_audit(cc, pairs).orderBy("cluster_id")
 
 
@@ -4492,16 +4457,16 @@ def q_dedup_cluster_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup graph; per-cluster radius and mean hops, the
     transitive-chain-merge depth panel (companion to X82's edge
     density)."""
-    from .operators.dedup import ngram_jaccard_from_docs
+    from .operators.dedup import neardup_pairs
     from .operators.graph import cluster_hops
 
     d = table(spark, sf_dir, "documents")
-    # Bounded pair set consumed by BOTH the CC inside cluster_hops and
-    # the BFS adjacency — materialized once.
-    edges = ngram_jaccard_from_docs(d, "doc_id", "text", 0.5).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).localCheckpoint(eager=True)
-    hops = cluster_hops(d.select("doc_id"), edges, id_col="doc_id")
+    # The pairs' one consumer is the adjacency that cluster_hops
+    # builds (and checkpoints) once for its CC and its BFS.
+    hops = cluster_hops(
+        d.select("doc_id"), neardup_pairs(d),
+        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
+    )
     return (
         hops.groupBy("cluster_id")
         .agg(
@@ -5030,22 +4995,16 @@ def q_dedup_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence graph (operators/graph.py: modularity) — the
     whole-partition score next to X82's per-cluster density; same
     pair/CC composition as dedup_cluster_density."""
-    from .operators.dedup import ngram_jaccard_from_docs
-    from .operators.graph import connected_components, modularity
+    from .operators.dedup import neardup_clusters, neardup_pairs
+    from .operators.graph import modularity
 
     d = table(spark, sf_dir, "documents")
     # The bounded pair set feeds CC once and modularity three times
     # (within-edges, degrees, edge count) — materialize it once;
     # un-pinned, each consumer re-executed the pair explode +
     # aggregate.
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    ).localCheckpoint(eager=True)
-    cc = connected_components(
-        d.select("doc_id"), pairs,
-        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    pairs = neardup_pairs(d).localCheckpoint(eager=True)
+    cc = neardup_clusters(d, pairs=pairs)
     return modularity(cc, pairs)
 
 
@@ -5396,8 +5355,7 @@ def q_dedup_survival_by_source(
     cluster canonical). Scale: three keyed min-aggregates + keyed
     joins back to the |sources| axis; the cluster stage is the
     existing pair+CC chain — nothing new shuffles."""
-    from .operators.dedup import fingerprint, ngram_jaccard_from_docs
-    from .operators.graph import connected_components
+    from .operators.dedup import fingerprint, neardup_clusters
 
     d = table(spark, sf_dir, "documents")
     base = d.select("source", "doc_id", "text")
@@ -5427,17 +5385,7 @@ def q_dedup_survival_by_source(
         .select("doc_id"),
         "3_fingerprint",
     )
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    )
-    cc = connected_components(
-        d.select("doc_id"),
-        pairs,
-        id_col="doc_id",
-        src_col="doc_a",
-        dst_col="doc_b",
-        fixed_rounds=4,
-    )
+    cc = neardup_clusters(d)
     cl = stage_counts(
         cc.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id"),
         "4_near_dup_clusters",

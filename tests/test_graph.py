@@ -1,161 +1,156 @@
-"""Connected-components algorithm equivalence and convergence-rate
-tests (operators/graph.py): min-label propagation vs the
-large-star/small-star alternation must produce identical labels, and
-star must converge in O(log n) rounds on the chain graphs that defeat
-min-label's diameter-round bound."""
+"""Connected components and cluster hops (operators/graph.py) against
+pure-Python references — union-find for the labels, BFS from each
+component's minimum id for the hops — on toy fixtures, a chain and the
+real sf0.01 near-dup pair graph; plus the loud failures (an
+unconverged loop, an edge endpoint missing from ``nodes``)."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import pytest
 
-from poet_cloud_cost_etl_spark.operators.graph import connected_components
+from poet_cloud_cost_etl_spark.operators.graph import (
+    cluster_hops,
+    connected_components,
+)
 
 
-def _labels(nodes_df, edges_df, **kw):
-    return {
-        r.id: r.cluster_id
-        for r in connected_components(nodes_df, edges_df, **kw).collect()
-    }
+def _union_find(nodes, edges):
+    """{node: minimum id of its component}: every union hangs the larger
+    root under the smaller, so each root is its set's minimum."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
 
 
-def _fixture_graph(spark):
-    # two multi-node components, one isolated pair, one singleton
-    nodes = spark.createDataFrame([(i,) for i in range(1, 12)], ["id"])
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (9, 10)], ["src", "dst"]
-    )
+def _bfs_hops(nodes, edges):
+    """{node: (cluster_id, hops from the cluster's minimum id)}."""
+    labels = _union_find(nodes, edges)
+    adj = defaultdict(set)
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    hops = {}
+    for root in set(labels.values()):
+        hops[root], frontier = 0, [root]
+        while frontier:
+            nxt = []
+            for u in frontier:
+                for v in adj[u]:
+                    if v not in hops:
+                        hops[v] = hops[u] + 1
+                        nxt.append(v)
+            frontier = nxt
+    return {n: (labels[n], hops[n]) for n in nodes}
+
+
+@pytest.fixture(scope="module")
+def real_pair_graph(spark):
+    """The sf0.01 near-dup pair graph the registered cluster queries
+    build, as Python lists."""
+    from conftest import SF_MEDIUM
+
+    from poet_cloud_cost_etl_spark.catalog import table
+    from poet_cloud_cost_etl_spark.operators.dedup import neardup_pairs
+
+    d = table(spark, SF_MEDIUM, "documents")
+    nodes = [r.doc_id for r in d.select("doc_id").collect()]
+    edges = [(r.doc_a, r.doc_b) for r in neardup_pairs(d).collect()]
+    assert edges, "fixture pair graph unexpectedly empty"
     return nodes, edges
 
 
-def test_star_matches_minlabel_on_fixture(spark):
-    nodes, edges = _fixture_graph(spark)
-    assert _labels(nodes, edges, algo="star") == _labels(
-        nodes, edges, algo="minlabel"
-    )
+GRAPHS = {
+    # two multi-node components, one isolated pair, one singleton
+    "fixture": (
+        list(range(1, 12)),
+        [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (9, 10)],
+    ),
+    "empty_edges": (list(range(1, 5)), []),
+    # diameter 15: eight probes under the default max_iter=20
+    "chain16": (list(range(16)), [(i, i + 1) for i in range(15)]),
+}
 
 
-def test_star_fixture_labels_are_component_minima(spark):
-    nodes, edges = _fixture_graph(spark)
-    got = _labels(nodes, edges, algo="star")
-    expect = {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8, 9: 9, 10: 9, 11: 11}
-    assert got == expect
+@pytest.fixture(params=[*GRAPHS, "sf001_pairs"])
+def graph(request, spark):
+    if request.param == "sf001_pairs":
+        nodes, edges = request.getfixturevalue("real_pair_graph")
+    else:
+        nodes, edges = GRAPHS[request.param]
+    nodes_df = spark.createDataFrame([(n,) for n in nodes], "id BIGINT")
+    edges_df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+    return nodes, edges, nodes_df, edges_df
 
 
-def test_star_handles_empty_edges(spark):
-    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], ["id"])
-    edges = spark.createDataFrame([], "src INT, dst INT")
-    assert _labels(nodes, edges, algo="star") == {1: 1, 2: 2, 3: 3, 4: 4}
+def test_cc_matches_union_find(graph):
+    nodes, edges, nodes_df, edges_df = graph
+    got = {
+        r.id: r.cluster_id
+        for r in connected_components(nodes_df, edges_df).collect()
+    }
+    assert got == _union_find(nodes, edges)
 
 
-def test_star_converges_logarithmically_on_chain(spark):
-    """A 64-node chain has diameter 63: min-label needs 63 rounds, the
-    star alternation O(log n). Pin the gap — star finishes within 12
-    rounds where min-label (given the same budget) must raise."""
+def test_cluster_hops_matches_bfs(graph):
+    nodes, edges, nodes_df, edges_df = graph
+    got = {
+        r.id: (r.cluster_id, r.hops)
+        for r in cluster_hops(nodes_df, edges_df).collect()
+    }
+    assert got == _bfs_hops(nodes, edges)
+
+
+def test_chain_deeper_than_max_iter_raises(spark):
+    """A 64-node chain needs 63 rounds: with max_iter=12 the loop must
+    raise rather than return labels that split the chain."""
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-
-    got = _labels(nodes, edges, algo="star", max_iter=12)
-    assert got == {i: 0 for i in range(n)}
-
     with pytest.raises(RuntimeError, match="did not confirm convergence"):
-        connected_components(nodes, edges, algo="minlabel", max_iter=12).collect()
+        connected_components(nodes, edges, max_iter=12)
 
 
-def test_star_matches_minlabel_on_real_pair_graph(spark):
-    """Equivalence on the REAL near-dup pair graph (sf0.01 documents →
-    n-gram Jaccard pairs), not just toy fixtures — the exact graph the
-    registered ``dedup_clusters`` query clusters with minlabel."""
-    from conftest import SF_MEDIUM
+def test_deep_near_dup_chain_is_one_cluster(spark):
+    """12 documents that are sliding 6-word windows: each neighbouring
+    pair has 3-gram Jaccard 3/5 = 0.6, each pair two apart 2/6, so the
+    pair graph is a path of radius 11 — deeper than any fixed round
+    budget a near-clique assumption would pick."""
+    from poet_cloud_cost_etl_spark.operators.dedup import (
+        neardup_clusters,
+        neardup_pairs,
+    )
 
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.dedup import ngram_jaccard_from_docs
-
-    d = table(spark, SF_MEDIUM, "documents")
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    ).localCheckpoint(eager=True)
-    assert pairs.count() > 0, "fixture pair graph unexpectedly empty"
-    nodes = d.select("doc_id")
-    kw = dict(id_col="doc_id", src_col="doc_a", dst_col="doc_b")
-
-    def labels(algo):
-        return {
-            r.doc_id: r.cluster_id
-            for r in connected_components(nodes, pairs, algo=algo, **kw).collect()
-        }
-
-    star, minlabel = labels("star"), labels("minlabel")
-    assert star == minlabel
-    assert len(star) == nodes.count()
-
-
-def test_unknown_algo_rejected(spark):
-    nodes, edges = _fixture_graph(spark)
-    with pytest.raises(ValueError, match="unknown algo"):
-        connected_components(nodes, edges, algo="bogus")
-
-
-def test_fixed_rounds_matches_probe_path(spark):
-    """fixed_rounds (one materialize job + one confirming round) must
-    produce exactly the probe path's labels on the fixture graph
-    (diameter 3 ≤ 4)."""
-    nodes, edges = _fixture_graph(spark)
-    assert _labels(nodes, edges, fixed_rounds=4) == _labels(nodes, edges)
-
-
-def test_fixed_rounds_matches_on_real_pair_graph(spark):
-    """The registered dedup_clusters configuration (fixed_rounds=4)
-    against the probe path on the real sf0.01 near-dup pair graph."""
-    from conftest import SF_MEDIUM
-
-    from poet_cloud_cost_etl_spark.catalog import table
-    from poet_cloud_cost_etl_spark.operators.dedup import ngram_jaccard_from_docs
-
-    d = table(spark, SF_MEDIUM, "documents")
-    pairs = ngram_jaccard_from_docs(
-        d, "doc_id", "text", threshold=0.5, min_df=2
-    ).localCheckpoint(eager=True)
-    nodes = d.select("doc_id")
-    kw = dict(id_col="doc_id", src_col="doc_a", dst_col="doc_b")
-    fixed = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes, pairs, fixed_rounds=4, **kw).collect()
-    }
-    probed = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(nodes, pairs, **kw).collect()
-    }
-    assert fixed == probed
-
-
-def test_fixed_rounds_too_small_raises_not_wrong(spark):
-    """An under-estimated diameter bound must RAISE at the confirming
-    round — never return labels that split a component."""
-    n = 16  # chain of diameter 15 >> fixed_rounds=2
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    with pytest.raises(RuntimeError, match="fixed_rounds=2"):
-        connected_components(nodes, edges, fixed_rounds=2).collect()
-
-
-def test_fixed_rounds_rejected_for_star(spark):
-    """fixed_rounds is documented minlabel-only; algo='star' must
-    refuse it loudly instead of silently taking the probe-per-round
-    star path (r6 advice)."""
-    nodes = spark.createDataFrame([(1,), (2,)], ["id"])
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with pytest.raises(ValueError, match="minlabel-only"):
-        connected_components(nodes, edges, algo="star", fixed_rounds=4)
+    words = [f"w{i}" for i in range(17)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[i : i + 6])) for i in range(12)],
+        "doc_id BIGINT, text STRING",
+    )
+    clusters = {r.doc_id: r.cluster_id for r in neardup_clusters(docs).collect()}
+    assert clusters == {i: 0 for i in range(12)}
+    hops = cluster_hops(
+        docs.select("doc_id"), neardup_pairs(docs),
+        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
+    )
+    assert max(r.hops for r in hops.collect()) == 11
 
 
 # ---------------------------------------------------------------------------
-# r15 (ADVICE r14 items 1-2): contract violations — an edge endpoint
-# missing from ``nodes`` — must be DETECTED (loud error), never
-# silently returned as split components / wrong distances.  The
-# missing endpoint has no self row, so its __prev is NULL; the
-# NULL-safe probes keep flagging it as changed until max_iter (probe
-# path) or the fixed_rounds confirm raises.
+# Contract violations — an edge endpoint missing from ``nodes`` — must be
+# DETECTED (loud error), never silently returned as split components or
+# wrong distances.  The missing endpoint has no self row, so its __prev is
+# NULL; the NULL-safe probe keeps flagging it as changed until max_iter.
 # ---------------------------------------------------------------------------
 
 
@@ -166,16 +161,7 @@ def test_missing_endpoint_detected_probe_path(spark):
         connected_components(nodes, edges, max_iter=4)
 
 
-def test_missing_endpoint_detected_fixed_rounds(spark):
-    nodes = spark.createDataFrame([(1,), (2,)], ["id"])
-    edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
-    with pytest.raises(RuntimeError):
-        connected_components(nodes, edges, fixed_rounds=3)
-
-
 def test_missing_endpoint_detected_cluster_hops(spark):
-    from poet_cloud_cost_etl_spark.operators.graph import cluster_hops
-
     nodes = spark.createDataFrame([(1,), (2,)], ["id"])
     edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
     with pytest.raises(RuntimeError):
